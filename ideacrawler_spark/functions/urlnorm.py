@@ -138,8 +138,9 @@ def _norm_userinfo(userinfo: str) -> str | None:
 # which FlagRemoveEmptyQuerySeparator drops) and no fragment. For a match
 # the full pipeline reduces to: lowercase scheme+host, drop the default
 # port, re-encode the path only when it contains escapes. Anything else
-# falls through to the general path below — same outputs, proven by the
-# urlnorm property tests which run both shapes through `canonicalize`.
+# falls through to the general path below — same outputs, checked by
+# tests/test_properties.py::test_canonicalize_fast_abs_equals_general,
+# which runs matching URLs through both paths.
 _RX_FAST_ABS = re.compile(
     r"^([A-Za-z][A-Za-z0-9+\-.]*)://"
     r"([A-Za-z0-9.\-]+)"
@@ -418,8 +419,9 @@ def resolve_canon_udf(unsafe: bool = False):
     ArrowEvalPython node — every surviving row paid for the resolve
     TWICE (two `_resolve` nodes in the anchor_corpus/round plans).
 
-    Batch fast paths (the general path is unchanged and fuzz-tested
-    equivalent):
+    Batch fast paths (the general path is unchanged; equivalence on
+    inputs the lanes accept is checked by
+    tests/test_properties.py::test_resolve_fast_lanes_equal_general):
     - an href that is itself an already-canonical absolute URL resolves
       to itself (RFC 3986 5.2.2 with a defined scheme);
     - a dot-segment-free rooted href against an already-canonical base is

@@ -154,17 +154,16 @@ def maybe_seen(candidates: DataFrame, bloom_dir: str,
 
 def bloom_anti_join_seen(candidates: DataFrame, seen: DataFrame,
                          bloom_dir: str, key: str = "url_norm",
-                         seen_key: str = "key", n_shards: int = N_SHARDS) -> DataFrame:
+                         seen_key: str = "key", n_shards: int = N_SHARDS,
+                         *, track: list) -> DataFrame:
     """Seen-set anti-join with Bloom prefilter: provably-new rows bypass
     the join; maybe-seen rows take the exact anti-join. Result is
-    identical to the plain anti-join (no false negatives)."""
-    from ideacrawler_spark.operators.dedup import anti_join_seen
+    identical to the plain anti-join (no false negatives). The probed
+    frame is persisted and appended to ``track`` (dedup.prefiltered_anti_join)."""
+    from ideacrawler_spark.operators.dedup import prefiltered_anti_join
 
     flagged = maybe_seen(
         candidates.withColumn("url_hash", F.xxhash64(F.col(key))), bloom_dir,
         n_shards=n_shards,
     )
-    fresh_fast = flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen", "url_hash")
-    to_check = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen", "url_hash")
-    checked = anti_join_seen(to_check, seen, key=key, seen_key=seen_key)
-    return fresh_fast.unionByName(checked)
+    return prefiltered_anti_join(flagged, seen, key, seen_key, track)

@@ -174,13 +174,11 @@ def maybe_seen(candidates: DataFrame, cuckoo_dir: str,
 def cuckoo_anti_join_seen(candidates: DataFrame, seen: DataFrame,
                           cuckoo_dir: str, key: str = "url_norm",
                           seen_key: str = "key",
-                          n_shards: int = N_SHARDS) -> DataFrame:
-    from ideacrawler_spark.operators.dedup import anti_join_seen
+                          n_shards: int = N_SHARDS, *, track: list) -> DataFrame:
+    from ideacrawler_spark.operators.dedup import prefiltered_anti_join
 
     flagged = maybe_seen(
         candidates.withColumn("url_hash", F.xxhash64(F.col(key))), cuckoo_dir,
         n_shards=n_shards,
     )
-    fresh_fast = flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen", "url_hash")
-    to_check = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen", "url_hash")
-    return fresh_fast.unionByName(anti_join_seen(to_check, seen, key, seen_key))
+    return prefiltered_anti_join(flagged, seen, key, seen_key, track)

@@ -77,3 +77,22 @@ def anti_join_seen(candidates: DataFrame, seen: DataFrame,
         & (F.col(key) == F.col("__seen_key")),
         how="left_anti",
     )
+
+
+def prefiltered_anti_join(flagged: DataFrame, seen: DataFrame, key: str,
+                          seen_key: str, track: list) -> DataFrame:
+    """:func:`anti_join_seen` behind a seen-set filter probe (Bloom or
+    cuckoo). ``flagged`` is the candidates plus the probe's ``url_hash``
+    and ``_maybe_seen`` columns: provably-unseen rows bypass the join,
+    maybe-seen rows (true hits and false positives) take the exact path.
+
+    ``flagged`` is persisted so that both branches read ONE evaluation of
+    the probe (unpersisted, each branch re-ran the Python probe over every
+    candidate). It is appended to ``track``; the caller unpersists it once
+    the result is materialized."""
+    flagged = flagged.persist()
+    track.append(flagged)
+    fresh = flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen", "url_hash")
+    to_check = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen", "url_hash")
+    return fresh.unionByName(
+        anti_join_seen(to_check, seen, key=key, seen_key=seen_key))

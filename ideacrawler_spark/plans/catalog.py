@@ -53,14 +53,17 @@ class ParquetManifestCatalog:
     # ---- tables ---------------------------------------------------------
     def write(self, df: DataFrame, rnd: int, table: str) -> DataFrame:
         """Write a round output; return the re-read (lineage-cut) frame."""
-        path = self.round_path(rnd, table)
-        df.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
+        return self._write(df, self.round_path(rnd, table))
 
     def write_aux(self, df: DataFrame, name: str) -> DataFrame:
-        path = self.aux_path(name)
+        return self._write(df, self.aux_path(name))
+
+    def _write(self, df: DataFrame, path: str) -> DataFrame:
         df.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
+        # the schema just written: a plain read would start a job to infer
+        # it from the footers (file reads make every field nullable either
+        # way, so the result is the same)
+        return self.spark.read.schema(df.schema).parquet(path)
 
     def read(self, rnd: int, table: str) -> DataFrame:
         return self.spark.read.parquet(self.round_path(rnd, table))

@@ -6,10 +6,15 @@ assume canonicalize(canonicalize(u)) == canonicalize(u); a non-idempotent
 case would make a crawled URL re-enqueueable forever.
 """
 
+import contextlib
+import re
 import string
+from unittest import mock
 
-from hypothesis import given, settings, strategies as st
+import pandas as pd
+from hypothesis import assume, given, settings, strategies as st
 
+from ideacrawler_spark.functions import urlnorm
 from ideacrawler_spark.functions.urlnorm import canonicalize, host_of
 from ideacrawler_spark.functions.robots import allowed, compile_rules
 
@@ -66,3 +71,88 @@ def test_robots_never_crashes_and_empty_allows(rules, path):
     compiled = compile_rules(rules)
     assert isinstance(allowed(compiled, path), bool)
     assert allowed(compile_rules([]), path) is True  # no rules ⇒ allow
+
+
+# ---- fast lanes ≡ general path ---------------------------------------------
+# Each fast lane of urlnorm is disabled by swapping its regex for one that
+# never matches; the general path must then give byte-identical output on
+# inputs the lane accepts.
+
+@contextlib.contextmanager
+def _general_path():
+    never = re.compile(r"(?!)")
+    with mock.patch.object(urlnorm, "_RX_FAST_ABS", never), \
+            mock.patch.object(urlnorm, "_RX_ALREADY_CANONICAL", never), \
+            mock.patch.object(urlnorm, "_RX_ALREADY_CANONICAL_RE2", r"\z."), \
+            mock.patch.object(urlnorm, "_RX_ROOTED_SIMPLE", never):
+        yield
+
+
+_FAST_PATH_CHARS = string.ascii_letters + string.digits + "-._~!$&'()*+,;=:@/[]"
+_escape = st.builds(lambda a, b: "%" + a + b, *[st.sampled_from("0123456789abcdefABCDEF")] * 2)
+
+
+@st.composite
+def fast_abs_urls(draw):
+    """URLs of the ``_RX_FAST_ABS`` shape: scheme://host[:port][/path][?]."""
+    scheme = draw(st.sampled_from(["http", "HTTP", "https", "Https", "ftp",
+                                   "git+ssh", "a.b-c"]))
+    host = draw(st.text(alphabet=string.ascii_letters + string.digits + ".-",
+                        min_size=1, max_size=12))
+    port = draw(st.sampled_from(["", ":80", ":443", ":8080", ":0", ":0080"]))
+    path = ""
+    if draw(st.booleans()):
+        path = "/" + "".join(draw(st.lists(
+            st.one_of(st.text(alphabet=_FAST_PATH_CHARS, min_size=1, max_size=4),
+                      _escape), max_size=6)))
+    return f"{scheme}://{host}{port}{path}" + draw(st.sampled_from(["", "?"]))
+
+
+_CANON_CHARS = string.ascii_lowercase + string.digits + "-._~!$&'()*+,;=@/"
+
+
+@st.composite
+def canonical_urls(draw):
+    """URLs of the ``_RX_ALREADY_CANONICAL`` shape."""
+    host = draw(st.text(alphabet=string.ascii_lowercase + string.digits + ".-",
+                        min_size=1, max_size=12))
+    path = ""
+    if draw(st.booleans()):
+        path = "/" + draw(st.text(alphabet=_CANON_CHARS, max_size=16))
+    return draw(st.sampled_from(["http", "https"])) + "://" + host + path
+
+
+_rooted_refs = st.builds(
+    lambda p: "/" + p,
+    st.text(alphabet=_CANON_CHARS, max_size=16).filter(lambda p: not p.startswith("/")))
+
+
+@settings(max_examples=400, deadline=None)
+@given(fast_abs_urls())
+def test_canonicalize_fast_abs_equals_general(u):
+    assert urlnorm._RX_FAST_ABS.match(u) is not None
+    fast = canonicalize(u)
+    with _general_path():
+        assert canonicalize(u) == fast
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(st.one_of(canonical_urls(), fast_abs_urls()), min_size=1, max_size=20))
+def test_canonicalize_series_fast_equals_general(us):
+    fast = urlnorm.canonicalize_series(pd.Series(us, dtype=object)).tolist()
+    with _general_path():
+        assert urlnorm.canonicalize_series(pd.Series(us, dtype=object)).tolist() == fast
+        assert [canonicalize(u) for u in us] == fast
+
+
+@settings(max_examples=300, deadline=None)
+@given(canonical_urls(), st.one_of(canonical_urls(), _rooted_refs))
+def test_resolve_fast_lanes_equal_general(spark, base, href):
+    fast_abs = urlnorm._RX_ALREADY_CANONICAL.match
+    assume(fast_abs(href) is not None or urlnorm._RX_ROOTED_SIMPLE.match(href))
+    b, h = pd.Series([base]), pd.Series([href])
+    fast = urlnorm.resolve_canon_udf().func(b, h)
+    with _general_path():
+        general = urlnorm.resolve_canon_udf().func(b, h)
+    pd.testing.assert_frame_equal(fast, general)
+
