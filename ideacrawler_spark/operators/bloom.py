@@ -151,19 +151,3 @@ def maybe_seen(candidates: DataFrame, bloom_dir: str,
         n_shards, shard_of(F.col(hash_col), n_shards)
     ).mapInPandas(probe, schema=schema)
 
-
-def bloom_anti_join_seen(candidates: DataFrame, seen: DataFrame,
-                         bloom_dir: str, key: str = "url_norm",
-                         seen_key: str = "key", n_shards: int = N_SHARDS,
-                         *, track: list) -> DataFrame:
-    """Seen-set anti-join with Bloom prefilter: provably-new rows bypass
-    the join; maybe-seen rows take the exact anti-join. Result is
-    identical to the plain anti-join (no false negatives). The probed
-    frame is persisted and appended to ``track`` (dedup.prefiltered_anti_join)."""
-    from ideacrawler_spark.operators.dedup import prefiltered_anti_join
-
-    flagged = maybe_seen(
-        candidates.withColumn("url_hash", F.xxhash64(F.col(key))), bloom_dir,
-        n_shards=n_shards,
-    )
-    return prefiltered_anti_join(flagged, seen, key, seen_key, track)

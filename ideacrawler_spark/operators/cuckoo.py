@@ -170,15 +170,3 @@ def maybe_seen(candidates: DataFrame, cuckoo_dir: str,
         n_shards, F.pmod(F.col(hash_col), F.lit(n_shards)).cast("int")
     ).mapInPandas(probe, schema=schema)
 
-
-def cuckoo_anti_join_seen(candidates: DataFrame, seen: DataFrame,
-                          cuckoo_dir: str, key: str = "url_norm",
-                          seen_key: str = "key",
-                          n_shards: int = N_SHARDS, *, track: list) -> DataFrame:
-    from ideacrawler_spark.operators.dedup import prefiltered_anti_join
-
-    flagged = maybe_seen(
-        candidates.withColumn("url_hash", F.xxhash64(F.col(key))), cuckoo_dir,
-        n_shards=n_shards,
-    )
-    return prefiltered_anti_join(flagged, seen, key, seen_key, track)

@@ -79,19 +79,17 @@ def anti_join_seen(candidates: DataFrame, seen: DataFrame,
     )
 
 
-def prefiltered_anti_join(flagged: DataFrame, seen: DataFrame, key: str,
-                          seen_key: str, track: list) -> DataFrame:
+def prefiltered_anti_join(flagged: DataFrame, seen: DataFrame,
+                          key: str = "url_norm",
+                          seen_key: str = "key") -> DataFrame:
     """:func:`anti_join_seen` behind a seen-set filter probe (Bloom or
-    cuckoo). ``flagged`` is the candidates plus the probe's ``url_hash``
-    and ``_maybe_seen`` columns: provably-unseen rows bypass the join,
-    maybe-seen rows (true hits and false positives) take the exact path.
+    cuckoo ``maybe_seen``). ``flagged`` is the candidates plus the probe's
+    ``url_hash`` and ``_maybe_seen`` columns: provably-unseen rows bypass
+    the join, maybe-seen rows (true hits and false positives) take the
+    exact path, so the result equals the plain anti-join.
 
-    ``flagged`` is persisted so that both branches read ONE evaluation of
-    the probe (unpersisted, each branch re-ran the Python probe over every
-    candidate). It is appended to ``track``; the caller unpersists it once
-    the result is materialized."""
-    flagged = flagged.persist()
-    track.append(flagged)
+    Both branches read ``flagged``: persist it, or each re-runs the
+    Python probe over every candidate."""
     fresh = flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen", "url_hash")
     to_check = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen", "url_hash")
     return fresh.unionByName(

@@ -44,7 +44,8 @@ def _local_frame(spark: SparkSession, rows: List[dict],
 
     ``createDataFrame(list)`` makes a pickled ``parallelize`` RDD instead,
     and every action that reads the frame re-reads it through Python
-    tasks; the seed and push rows are read by every action of a round."""
+    tasks; the seed and push rows and the robots dim are read by every
+    action of a round."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -83,16 +84,16 @@ class CrawlEngine:
         self.spark = spark
         self.spec = spec
         self.pages = pages
-        # the robots dim never changes, and every round broadcasts it from
-        # several actions: it is persisted while a crawl runs (step) and
-        # released when run()/drain()/subscribe() return (close)
-        self.robots_host = self._prep_robots(robots) if robots is not None else None
+        # the robots dim never changes, and every action of every round
+        # broadcasts it: it is collected ONCE into a driver-local frame
+        # (broadcast-small, so it fits on the driver anyway) and no action
+        # rebuilds it from the caller's robots rows
+        self.robots_host = self._local_robots(robots) if robots is not None else None
         # literal upper bound on any host's budget (max over the robots
-        # dim's crawl delays + the no-robots default) — computed ONCE, by
-        # the first round (the dim is broadcast-small); lets admission use
-        # WindowGroupLimit partial top-k instead of full window sorts
-        # (admission.py)
-        self._host_budget_max: Optional[int] = None
+        # dim's crawl delays + the no-robots default) — computed ONCE (the
+        # dim is broadcast-small); lets admission use WindowGroupLimit
+        # partial top-k instead of full window sorts (admission.py)
+        self._host_budget_max = self._max_host_budget()
         self.pushes = sorted(pushes or [], key=lambda p: (int(p.get("round", 0)), int(p.get("seq", 0))))
         self._push_lock = threading.Lock()  # add_pushes vs injection
         # injection CONSUMES self.pushes; this log records every push that
@@ -184,6 +185,13 @@ class CrawlEngine:
             .select("host", "crawl_delay", "rules")
         )
 
+    def _local_robots(self, robots: DataFrame) -> DataFrame:
+        """The robots dim (``_prep_robots``) as a driver-local frame."""
+        dim = self._prep_robots(robots)
+        return _local_frame(
+            self.spark, [r.asDict(recursive=True) for r in dim.collect()],
+            dim.schema)
+
     def _max_host_budget(self) -> int:
         budgets = [self.spec.host_budget(0.0)]
         if self.robots_host is not None and not self.spec.impolite:
@@ -195,25 +203,6 @@ class CrawlEngine:
                 self.spec.host_budget(float(d)) for d in delays if d is not None
             ]
         return max(budgets)
-
-    def _robots_dim(self) -> Optional[DataFrame]:
-        """The robots dim, persisted until ``close()``. Unpersisted, each
-        action that broadcasts it rebuilds it from the caller's robots
-        rows."""
-        if self.robots_host is not None and not self.robots_host.is_cached:
-            self.robots_host.persist()
-        if self._host_budget_max is None:
-            # on a polite crawl this first read fills the dim's cache
-            self._host_budget_max = self._max_host_budget()
-        return self.robots_host
-
-    def close(self):
-        """Release what the engine persisted for the rounds of a crawl.
-        ``run()``, ``drain()`` and ``subscribe()`` call this when they
-        return (or the generator is closed); a later ``step()`` persists
-        again."""
-        if self.robots_host is not None and self.robots_host.is_cached:
-            self.robots_host.unpersist()
 
     # ------------------------------------------------------------------
     def _empty_frontier(self) -> DataFrame:
@@ -417,10 +406,9 @@ class CrawlEngine:
                                      robots_denied=0, errors=0))
             self.round += 1
             return 0
-        robots_host = self._robots_dim()
         res = run_round(
             self.spark, self.spec, rnd, self.frontier, self.seen,
-            self.pages, robots_host,
+            self.pages, self.robots_host,
             fetch_seq_offset=self.fetch_seq_offset,
             seq_offset=self.seq_offset,
             shuffle_partitions=self.nparts,
@@ -445,11 +433,12 @@ class CrawlEngine:
         #   resolved links (extract + resolve UDFs), the eligible links,
         #   the Bloom/cuckoo probe, the new keys (`new_firsts`) and the
         #   rank inputs;
-        # - per engine: the robots dim (_robots_dim, released by close).
+        # - driver-local, so no job computes them: the robots dim (built
+        #   once per engine) and the seed and push rows.
         # The rest is recomputed by each action that needs it: the
         # admission window under `carried` (frontier_next reads it from
         # the frontier, not from `allowed`), the broadcast of the robots
-        # dim (from its cache), and the JVM-only joins and aggregates
+        # dim (from the driver), and the JVM-only joins and aggregates
         # above the shared frames. Atomic-commit safety is unchanged:
         # _COMMIT.json still lands only after every write has returned.
         m = res.metrics
@@ -575,13 +564,10 @@ class CrawlEngine:
     def drain(self):
         """Run rounds until the frontier is empty (all-hosts-idle analogue,
         fetch.go:430-444), cancel() fires, or max_rounds hits."""
-        try:
-            while self.round < self.spec.max_rounds and not self._cancelled:
-                if self._frontier_count == 0 and not self._has_future_pushes(self.round):
-                    break
-                self.step()
-        finally:
-            self.close()
+        while self.round < self.spec.max_rounds and not self._cancelled:
+            if self._frontier_count == 0 and not self._has_future_pushes(self.round):
+                break
+            self.step()
 
     def subscribe(self, resume: bool = False):
         """The ``AddDomainAndListen`` / ``GetAnalyzedURLs`` analogue
@@ -600,21 +586,18 @@ class CrawlEngine:
             pass
         else:
             self._init_state()
-        try:
-            while self.round < self.spec.max_rounds and not self._cancelled:
-                if self._frontier_count == 0 and not self._has_future_pushes(self.round):
-                    break
-                n_before = len(self._shipped)
-                self.step()
-                if len(self._shipped) > n_before:
-                    yield dict(
-                        round=self.round - 1,
-                        shipped=self._shipped[-1],
-                        outlinks=self._outlinks[-1],
-                        metrics=self.metrics[-1],
-                    )
-        finally:
-            self.close()
+        while self.round < self.spec.max_rounds and not self._cancelled:
+            if self._frontier_count == 0 and not self._has_future_pushes(self.round):
+                break
+            n_before = len(self._shipped)
+            self.step()
+            if len(self._shipped) > n_before:
+                yield dict(
+                    round=self.round - 1,
+                    shipped=self._shipped[-1],
+                    outlinks=self._outlinks[-1],
+                    metrics=self.metrics[-1],
+                )
 
     def add_pushes(self, rows: List[dict]):
         """Streaming entry: enqueue client pushes (AddPages,

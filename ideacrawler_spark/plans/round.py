@@ -29,7 +29,8 @@ from ideacrawler_spark.functions.extract import extract_links_udf
 from ideacrawler_spark.functions.robots import robots_allowed_udf
 from ideacrawler_spark.functions.urlnorm import host_raw, resolve_canon_udf
 from ideacrawler_spark.operators.admission import admit_budget
-from ideacrawler_spark.operators.dedup import anti_join_seen, first_occurrence
+from ideacrawler_spark.operators.dedup import (
+    anti_join_seen, first_occurrence, prefiltered_anti_join)
 from ideacrawler_spark.operators.rank import global_rank
 
 # pandas UDFs are plan-level objects: constructing one costs py4j round
@@ -200,22 +201,19 @@ def _host_budget_col_cached(impolite: bool, eff: float,
     return per_thread * F.lit(threads)
 
 
-def _python_tasks_for(spark: SparkSession, df: DataFrame,
-                      row_bound: Optional[int]) -> DataFrame:
-    """Coalesce ``df`` to the tasks ``row_bound`` rows need, one Arrow
-    batch each, ahead of a pandas UDF.
+def _one_task_if_one_batch(spark: SparkSession, df: DataFrame,
+                           row_bound: Optional[int]) -> DataFrame:
+    """Coalesce ``df`` to ONE task ahead of a pandas UDF when at most
+    ``row_bound`` rows, which fit in one Arrow batch, reach it.
 
     Every Python task pays a fixed worker set-up cost whatever its row
     count (~0.2 CPU-s with PySpark 4.1 on a 4-core x86 host), so a
     handful of rows spread over the shuffle partitions pays it that many
-    times. Coalescing is narrow (no shuffle); an input whose bound exceeds
-    one batch per shuffle partition keeps its partitioning."""
-    if row_bound is None:
-        return df
+    times. Coalescing is narrow (no shuffle). A larger input, or a batch
+    size of zero or less (no limit), keeps its partitioning."""
     batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
-    tasks = max(1, -(-row_bound // batch)) if batch > 0 else 1
-    if tasks < int(spark.conf.get("spark.sql.shuffle.partitions")):
-        return df.coalesce(tasks)
+    if row_bound is not None and 0 < batch and row_bound <= batch:
+        return df.coalesce(1)
     return df
 
 
@@ -268,13 +266,13 @@ def run_round(
     # ---- robots allow/deny gate (pandas UDF over the joined rule array) --
     # Go tests agent.Test(v.URL().Path) — the raw (possibly EMPTY) path;
     # %-decoding happens inside the UDF (u.Path is the decoded form).
-    # The UDF's tasks are sized by the PENDING count, not the admitted
-    # one: coalescing is narrow, so the same tasks also run the admission
+    # A round coalesces by its PENDING count, not the admitted one:
+    # coalescing is narrow, so the same task also runs the admission
     # window over every pending row.
     if spec.impolite:
         allowed = admitted.withColumn("_allowed", F.lit(True))
     else:
-        allowed = _python_tasks_for(spark, admitted, n_pending).withColumn(
+        allowed = _one_task_if_one_batch(spark, admitted, n_pending).withColumn(
             "_allowed",
             _udfs(spec.unsafe_normalize)["robots"](X["path_col"],
                                                    F.col("rules")),
@@ -452,18 +450,17 @@ def run_round(
     #      With a Bloom checkpoint, provably-new rows skip the join (D1).
     firsts = first_occurrence(eligible)
     _probe_caches: list = []
-    if bloom_dir is not None and seen_filter == "cuckoo":
-        from ideacrawler_spark.operators.cuckoo import cuckoo_anti_join_seen
+    if bloom_dir is not None:
+        from ideacrawler_spark.operators import bloom, cuckoo
 
-        new_firsts = cuckoo_anti_join_seen(
-            firsts, seen, bloom_dir, n_shards=bloom_shards,
-            track=_probe_caches).persist()
-    elif bloom_dir is not None:
-        from ideacrawler_spark.operators.bloom import bloom_anti_join_seen
-
-        new_firsts = bloom_anti_join_seen(
-            firsts, seen, bloom_dir, n_shards=bloom_shards,
-            track=_probe_caches).persist()
+        probe = cuckoo if seen_filter == "cuckoo" else bloom
+        # persisted: both branches of the prefiltered anti-join read ONE
+        # evaluation of the Python probe
+        flagged = probe.maybe_seen(
+            firsts.withColumn("url_hash", F.xxhash64("url_norm")), bloom_dir,
+            n_shards=bloom_shards).persist()
+        _probe_caches.append(flagged)
+        new_firsts = prefiltered_anti_join(flagged, seen).persist()
     else:
         # firsts comes straight out of the groupBy(url_norm) — the anti-
         # join reuses that exchange and hash-probes the seen side unsorted

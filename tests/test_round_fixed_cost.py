@@ -1,10 +1,11 @@
 """The crawl round's fixed-cost paths against their general paths.
 
-- seed and push rows built through Arrow equal ``createDataFrame(list)``;
-- the Bloom/cuckoo-prefiltered anti-joins equal the exact anti-join and
-  probe each candidate once;
-- the robots UDF keeps its input partitioning on rounds whose pending
-  rows exceed one Arrow batch per partition;
+- seed and push rows built through Arrow equal ``createDataFrame(list)``,
+  and the driver-local robots dim equals the one it was collected from;
+- the Bloom/cuckoo-prefiltered anti-join equals the exact anti-join, and
+  a round probes each candidate once;
+- the robots UDF runs on one task only when a round's pending rows fit
+  in one Arrow batch;
 - a checkpointed crawl leaves no persisted frame behind, and the catalog
   returns the schema a plain parquet read would infer.
 """
@@ -14,7 +15,8 @@ from pyspark.sql import functions as F
 
 from ideacrawler_spark.config import JobSpec
 from ideacrawler_spark.operators import bloom, cuckoo
-from ideacrawler_spark.operators.dedup import anti_join_seen
+from ideacrawler_spark.operators.dedup import (
+    anti_join_seen, prefiltered_anti_join)
 from ideacrawler_spark.plans.catalog import ParquetManifestCatalog
 from ideacrawler_spark.plans.crawl import CrawlEngine, _frontier_schema
 from ideacrawler_spark.plans.round import run_round
@@ -102,8 +104,12 @@ def test_arrow_frontier_rows_equal_list_rows(spark, web_dfs):
     assert eng.seen.schema == spark.createDataFrame(
         [("http://hosta.example/p/0",)], "key string").schema
     assert [r["key"] for r in eng.seen.collect()] == ["http://hosta.example/p/0"]
-    # read by the JVM alone: no pickled Python RDD under either frame
-    for df in (eng.frontier, eng.seen):
+    # the robots dim is collected once, rows and schema unchanged
+    dim = eng._prep_robots(robots_df)
+    assert eng.robots_host.schema == dim.schema
+    assert sorted(eng.robots_host.collect()) == sorted(dim.collect())
+    # read by the JVM alone: no pickled Python RDD under any of the frames
+    for df in (eng.frontier, eng.seen, eng.robots_host):
         names = {n.nodeName() for n in _plan_nodes(_executed(df))}
         assert "LocalTableScan" in names
         assert not any("ExistingRDD" in n for n in names)
@@ -111,7 +117,12 @@ def test_arrow_frontier_rows_equal_list_rows(spark, web_dfs):
 
 # ---- (b) prefiltered anti-joins ----------------------------------------------
 
-def test_prefiltered_anti_joins_match_exact_and_probe_once(spark, tmp_path):
+def _probe_nodes(df):
+    return [n for n in _plan_nodes(_executed(df))
+            if n.nodeName() == "MapInPandas"]
+
+
+def test_prefiltered_anti_join_matches_exact(spark, tmp_path):
     seen_keys = [f"http://h{i % 5}.example/seen/{i}" for i in range(40)]
     false_pos = [f"http://h{i % 5}.example/fp/{i}" for i in range(20)]
     fresh = [f"http://h{i % 5}.example/new/{i}" for i in range(60)]
@@ -126,25 +137,48 @@ def test_prefiltered_anti_joins_match_exact_and_probe_once(spark, tmp_path):
         .select(F.xxhash64("key").alias("key_hash"))
     want = sorted(anti_join_seen(cand, seen).collect())
     assert len(want) == len(false_pos) + len(fresh)
-    for mod, join in ((bloom, bloom.bloom_anti_join_seen),
-                      (cuckoo, cuckoo.cuckoo_anti_join_seen)):
+    for mod in (bloom, cuckoo):
         d = str(tmp_path / mod.__name__.rsplit(".", 1)[1])
         mod.update_shards(in_filter, None, d, n_shards=4)
         flagged = mod.maybe_seen(
-            cand.withColumn("url_hash", F.xxhash64("url_norm")), d, n_shards=4)
-        assert flagged.filter("_maybe_seen").count() >= 40 // 2 + len(false_pos)
-        track: list = []
-        got = join(cand, seen, d, n_shards=4, track=track)
-        assert sorted(got.collect()) == want
-        assert got.columns == cand.columns
-        probes = [n for n in _plan_nodes(_executed(got))
-                  if n.nodeName() == "MapInPandas"]
-        rows = sum(n.metrics().apply("pythonNumRowsReceived").value()
-                   for n in probes)
-        assert rows == cand.count()
-        assert len(track) == 1
-        for df in track:
-            df.unpersist()
+            cand.withColumn("url_hash", F.xxhash64("url_norm")), d,
+            n_shards=4).persist()
+        try:
+            assert flagged.filter("_maybe_seen").count() \
+                >= len(seen_keys) // 2 + len(false_pos)
+            got = prefiltered_anti_join(flagged, seen)
+            assert sorted(got.collect()) == want
+            assert got.columns == cand.columns
+        finally:
+            flagged.unpersist()
+
+
+def test_round_probes_seen_filter_once(spark, web_dfs, tmp_path):
+    pages_df, robots_df, _, _ = web_dfs
+    spec = JobSpec(job_id="probe", seed_url="http://hosta.example/p/0",
+                   min_delay_s=1, round_seconds=10)
+    eng = CrawlEngine(spark, spec, pages_df, robots_df, shuffle_partitions=8)
+    eng._init_state()
+    seen_hash = eng.seen.select(F.xxhash64("key").alias("key_hash"))
+    for mod in (bloom, cuckoo):
+        name = mod.__name__.rsplit(".", 1)[1]
+        d = str(tmp_path / name)
+        mod.update_shards(seen_hash, None, d, n_shards=4)
+        res = run_round(spark, spec, 0, eng.frontier, eng.seen, pages_df,
+                        eng.robots_host, fetch_seq_offset=0, seq_offset=1,
+                        shuffle_partitions=8, bloom_dir=d, bloom_shards=4,
+                        seen_filter=name, n_pending=1,
+                        host_budget_max=eng._host_budget_max)
+        try:
+            assert res.seen_new.count() > 0
+            # both branches of the anti-join read one probe evaluation
+            probes = _probe_nodes(res.seen_new)
+            assert len(probes) == 1, name
+            assert probes[0].metrics().apply(
+                "pythonNumRowsReceived").value() > 0
+        finally:
+            for df in res._cached:
+                df.unpersist()
 
 
 # ---- (c) robots UDF partitioning -----------------------------------------------
@@ -157,29 +191,39 @@ def _robots_udf_input_partitions(res) -> int:
     return nodes[0].child().outputPartitioning().numPartitions()
 
 
-def test_robots_udf_coalesces_only_rounds_below_one_batch_per_partition(
-        spark, web_dfs):
+def test_robots_udf_runs_on_one_task_only_for_one_batch(spark, web_dfs):
     pages_df, robots_df, _, _ = web_dfs
     spec = JobSpec(job_id="coalesce", seed_url="http://hosta.example/p/0",
                    min_delay_s=1, round_seconds=10)
     eng = CrawlEngine(spark, spec, pages_df, robots_df, shuffle_partitions=8)
     eng._init_state()
-    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    batch = int(spark.conf.get(conf))
     n_in = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # a small global budget does not shrink the tasks: they also run the
-    # admission window over every pending row
-    for n_pending, budget, want in ((5, 5, 1), (batch + 1, batch + 1, 2),
-                                    (batch * n_in + 1, batch * n_in + 1, n_in),
-                                    (batch * n_in + 1, 5, n_in)):
+
+    def partitions(n_pending, budget):
         res = run_round(spark, spec, 0, eng.frontier, eng.seen, pages_df,
                         eng.robots_host, fetch_seq_offset=0, seq_offset=1,
                         shuffle_partitions=8, global_budget=budget,
                         n_pending=n_pending, host_budget_max=10)
         try:
-            assert _robots_udf_input_partitions(res) == want, (n_pending, budget)
+            return _robots_udf_input_partitions(res)
         finally:
             for df in res._cached:
                 df.unpersist()
+
+    # a small global budget does not shrink the tasks: they also run the
+    # admission window over every pending row
+    for n_pending, budget, want in ((5, 5, 1), (batch, batch, 1),
+                                    (batch + 1, batch + 1, n_in),
+                                    (batch * n_in + 1, 5, n_in)):
+        assert partitions(n_pending, budget) == want, (n_pending, budget)
+    # a batch size of zero or less is no limit, not a one-row batch
+    spark.conf.set(conf, "-1")
+    try:
+        assert partitions(5, 5) == n_in
+    finally:
+        spark.conf.set(conf, str(batch))
 
 
 # ---- persist lifecycle + catalog schemas (one small crawl) ---------------------
@@ -200,20 +244,10 @@ def test_checkpointed_crawl_releases_persists_and_keeps_schemas(
         return out
 
     monkeypatch.setattr(ParquetManifestCatalog, "_write", recording_write)
-    ck = str(tmp_path / "ck")
-
-    def engine():
-        return CrawlEngine(spark, spec, pages_df, robots_df, pushes,
-                           checkpoint_dir=ck, shuffle_partitions=8,
-                           bloom_shards=8, seen_compact_every=2)
-
     before = _persistent_rdds(spark)
-    gen = engine().subscribe()
-    assert next(gen)["round"] == 0
-    assert _persistent_rdds(spark) - before  # the robots dim, mid-crawl
-    gen.close()
-    assert not _persistent_rdds(spark) - before
-    out = engine().run(resume=True)
+    out = CrawlEngine(spark, spec, pages_df, robots_df, pushes,
+                      checkpoint_dir=str(tmp_path / "ck"), shuffle_partitions=8,
+                      bloom_shards=8, seen_compact_every=2).run()
     assert not _persistent_rdds(spark) - before
 
     golden = simulate(spec, pages, robots, pushes)
