@@ -56,6 +56,18 @@ def _indexes(hashes: np.ndarray, m: int = M_BITS, k: int = K_HASHES) -> np.ndarr
     return ((h1[:, None] + i * h2[:, None]) % np.uint64(m)).astype(np.int64)
 
 
+def _fold(arr: np.ndarray, hashes: np.ndarray) -> None:
+    """Set the bits of ``hashes`` in the shard bitset ``arr`` in place."""
+    flat = _indexes(hashes).reshape(-1)
+    np.bitwise_or.at(arr, flat >> 3, (1 << (flat & 7)).astype(np.uint8))
+
+
+def _contains(arr: np.ndarray, hashes: np.ndarray) -> np.ndarray:
+    """Per hash: True if all its bits are set in ``arr`` (maybe seen)."""
+    idx = _indexes(hashes)
+    return ((arr[idx >> 3] >> (idx & 7)) & 1).all(axis=1)
+
+
 def _shard_path(bloom_dir: str, shard: int) -> str:
     return shardfs.join(bloom_dir, f"shard={shard:04d}.npy")
 
@@ -93,9 +105,7 @@ def update_shards(seen_new: DataFrame, prev_dir: str | None, out_dir: str,
             return pd.DataFrame({"shard": [], "n": []})
         shard = int(pdf["shard"].iloc[0])
         arr = _load_shard(out_dir, shard)
-        idx = _indexes(pdf["h"].to_numpy())
-        flat = idx.reshape(-1)
-        np.bitwise_or.at(arr, flat >> 3, (1 << (flat & 7)).astype(np.uint8))
+        _fold(arr, pdf["h"].to_numpy())
         buf = io.BytesIO()
         np.save(buf, arr)
         _save_shard(_shard_path(out_dir, shard), buf.getvalue())
@@ -129,11 +139,8 @@ def maybe_seen(candidates: DataFrame, bloom_dir: str,
             for s in np.unique(shards):
                 if s not in cache:
                     cache[int(s)] = _load_shard(bloom_dir, int(s))
-                arr = cache[int(s)]
                 mask = shards == s
-                idx = _indexes(h[mask])
-                bits = (arr[idx >> 3] >> (idx & 7)) & 1
-                out[mask] = bits.all(axis=1)
+                out[mask] = _contains(cache[int(s)], h[mask])
             pdf = pdf.copy()
             pdf["_maybe_seen"] = out
             yield pdf

@@ -61,9 +61,9 @@ def anti_join_seen(candidates: DataFrame, seen: DataFrame,
     hash anti-probe needs no sort on either side (the hash-led key only
     paid off by making sort-merge compares cheap). The per-partition build
     side is |seen| / shuffle-partitions — bounded; at the 10^10 design
-    point the production path prefilters through the Bloom/cuckoo shards
-    (operators/bloom.py) so the exact join only ever sees the maybe-seen
-    remainder."""
+    point the production path prefilters through the Bloom shards
+    (operators/bloom.py, :func:`prefiltered_anti_join`) so the exact join
+    only ever sees the maybe-seen remainder."""
     if partitioned:
         s = seen.select(F.col(seen_key).alias(key)).hint("SHUFFLE_HASH")
         return candidates.join(s, on=[key], how="left_anti")
@@ -82,8 +82,8 @@ def anti_join_seen(candidates: DataFrame, seen: DataFrame,
 def prefiltered_anti_join(flagged: DataFrame, seen: DataFrame,
                           key: str = "url_norm",
                           seen_key: str = "key") -> DataFrame:
-    """:func:`anti_join_seen` behind a seen-set filter probe (Bloom or
-    cuckoo ``maybe_seen``). ``flagged`` is the candidates plus the probe's
+    """:func:`anti_join_seen` behind the Bloom seen-set probe
+    (``bloom.maybe_seen``). ``flagged`` is the candidates plus the probe's
     ``url_hash`` and ``_maybe_seen`` columns: provably-unseen rows bypass
     the join, maybe-seen rows (true hits and false positives) take the
     exact path, so the result equals the plain anti-join.

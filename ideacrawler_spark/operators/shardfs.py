@@ -1,6 +1,6 @@
-"""Filesystem shim for filter-shard state — cluster-safe by construction.
+"""Filesystem shim for Bloom-shard state — cluster-safe by construction.
 
-The Bloom/cuckoo seen-set shards are per-partition state files read and
+The Bloom seen-set shards are per-partition state files read and
 written INSIDE executor tasks. On local[*] a plain ``os.path`` works only
 because executors share the driver's disk; on a real cluster it silently
 loses state. Every shard IO therefore goes through ``pyarrow.fs``:

@@ -20,7 +20,7 @@ Mapping to a real Iceberg catalog (the production cutover, one class):
 | aux_path(name)         | <root>/<name> directory           | object-store prefix next to the table          |
 
 The engine never touches the filesystem for round state except through
-this interface (Bloom/cuckoo shard files go through ``aux_path``/
+this interface (Bloom shard files go through ``aux_path``/
 ``round_path`` + operators/shardfs.py, which already speaks pyarrow.fs
 URIs — hdfs:// and s3:// included), so the crawl/commit/resume tests run
 unchanged against either implementation.

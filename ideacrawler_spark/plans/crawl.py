@@ -2,7 +2,7 @@
 atomic per-round checkpoints and crash-resume.
 
 The reference crawls continuously with goroutines and loses everything on
-a crash (no persistence anywhere). This driver is the batch/streaming
+a crash (no persistence anywhere). This driver is the micro-batch
 analogue of its job loop (RunJob, job.go:599-673 + fetchbot queue): each
 frontier round is one micro-batch; termination is the all-hosts-idle
 condition (frontier empty, fetch.go:430-444 AutoClose).
@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 
 from ideacrawler_spark.config import DelaySampler, JobSpec
 from ideacrawler_spark.functions.urlnorm import canonicalize
+from ideacrawler_spark.operators import bloom
 from ideacrawler_spark.plans.catalog import ParquetManifestCatalog
 from ideacrawler_spark.plans.round import FRONTIER_SCHEMA, run_round
 
@@ -77,7 +78,6 @@ class CrawlEngine:
         checkpoint_dir: Optional[str] = None,
         shuffle_partitions: int = 32,
         bloom_shards: int = 64,
-        seen_filter: str = "bloom",   # or "cuckoo" (operators/cuckoo.py)
         seen_compact_every: int = 8,
         expire_on_compact: bool = True,
     ):
@@ -96,10 +96,6 @@ class CrawlEngine:
         self._host_budget_max = self._max_host_budget()
         self.pushes = sorted(pushes or [], key=lambda p: (int(p.get("round", 0)), int(p.get("seq", 0))))
         self._push_lock = threading.Lock()  # add_pushes vs injection
-        # injection CONSUMES self.pushes; this log records every push that
-        # actually entered the frontier, stamped with its effective round,
-        # so a streaming run can be replayed as a batch job
-        self.pushes_log: List[dict] = []
         self.ckpt = checkpoint_dir
         # all round-state durability goes through the catalog seam
         # (plans/catalog.py): parquet+manifest here, Iceberg in production
@@ -107,7 +103,6 @@ class CrawlEngine:
                         if checkpoint_dir else None)
         self.nparts = shuffle_partitions
         self.bloom_shards = bloom_shards
-        self.seen_filter = seen_filter
         # P4: randomized per-request delay sampler (doer.go:93-112); with
         # MaxDelay<=MinDelay it consumes no draws and budgets are fixed
         self._sampler = DelaySampler.for_spec(spec)
@@ -134,7 +129,6 @@ class CrawlEngine:
         self._shipped: List[DataFrame] = []
         self._order: List[DataFrame] = []
         self._outlinks: List[DataFrame] = []
-        self.step_timings: List[dict] = []  # per-round phase walls (diag)
 
     # ------------------------------------------------------------------
     def _prep_robots(self, robots: DataFrame) -> DataFrame:
@@ -245,10 +239,8 @@ class CrawlEngine:
         # key must be folded in before it can be anti-joined against)
         self.bloom_dir = None
         if self.ckpt:
-            update_shards = self._update_shards_fn()
-
             init_dir = self.catalog.aux_path("bloom_init")
-            update_shards(
+            bloom.update_shards(
                 self.seen.select(F.xxhash64("key").alias("key_hash")),
                 None, init_dir, n_shards=self.bloom_shards,
             )
@@ -288,7 +280,6 @@ class CrawlEngine:
                     no_callback=bool(p.get("no_callback", False)),
                 )
             )
-            self.pushes_log.append(dict(p, round=rnd))
             self.seq_offset += 1
         with self._push_lock:
             # add_pushes only appends, so anything past the snapshot is a
@@ -323,7 +314,6 @@ class CrawlEngine:
             seq_offset=self.seq_offset,
             fetch_seq_offset=self.fetch_seq_offset,
             bloom_shards=self.bloom_shards,
-            seen_filter=self.seen_filter,
             metrics=self.metrics[-1] if self.metrics else None,
             spec=self.spec.to_dict(),
         )
@@ -339,6 +329,14 @@ class CrawlEngine:
         if r < 0:
             return False
         manifest = self.catalog.manifest(r)
+        # the filter shards are Bloom bitsets; a checkpoint holding another
+        # filter's shards would read as empty bitsets, i.e. every seen URL
+        # "provably unseen" and fetched again
+        seen_filter = manifest.get("seen_filter", "bloom")
+        if seen_filter != "bloom":
+            raise ValueError(
+                f"resume: round {r}'s _COMMIT.json names seen_filter="
+                f"{seen_filter!r}; this engine reads only Bloom shards")
         self.frontier = self.catalog.read(r, "frontier_next")
         # seen-set = latest compaction (seen_full) + the deltas after it;
         # with no compaction yet, the base is the job's seen_init
@@ -363,7 +361,6 @@ class CrawlEngine:
                           if self.catalog.has_table(r, "bloom") else None)
         # shard count is a property of the persisted state, not the caller
         self.bloom_shards = int(manifest.get("bloom_shards", self.bloom_shards))
-        self.seen_filter = manifest.get("seen_filter", self.seen_filter)
         # P4 resume: replay the per-round budget draws for the committed
         # rounds so the sampler state matches the uninterrupted run
         self._sampler = DelaySampler.for_spec(self.spec)
@@ -378,13 +375,6 @@ class CrawlEngine:
             self.pushes = [p for p in self.pushes
                            if int(p.get("round", 0)) > r]
         return True
-
-    def _update_shards_fn(self):
-        if self.seen_filter == "cuckoo":
-            from ideacrawler_spark.operators.cuckoo import update_shards
-        else:
-            from ideacrawler_spark.operators.bloom import update_shards
-        return update_shards
 
     # ------------------------------------------------------------------
     def step(self) -> int:
@@ -414,14 +404,10 @@ class CrawlEngine:
             shuffle_partitions=self.nparts,
             bloom_dir=self.bloom_dir,
             bloom_shards=self.bloom_shards,
-            seen_filter=self.seen_filter,
             global_budget=global_budget,
             n_pending=n_pending,
             host_budget_max=self._host_budget_max,
         )
-        import time as _time
-
-        _t_plan_done = _time.monotonic()
         # ALL SEVEN round actions run CONCURRENTLY: the single counters
         # collect and the six output materializations, so the writes do
         # not serialize behind the collect (VERDICT r02 #4). What they
@@ -431,7 +417,7 @@ class CrawlEngine:
         # - per round (res._cached): the robots-gated admissions
         #   (`allowed`, the robots UDF), the fetch join (`fetched`), the
         #   resolved links (extract + resolve UDFs), the eligible links,
-        #   the Bloom/cuckoo probe, the new keys (`new_firsts`) and the
+        #   the Bloom probe, the new keys (`new_firsts`) and the
         #   rank inputs;
         # - driver-local, so no job computes them: the robots dim (built
         #   once per engine) and the seed and push rows.
@@ -464,18 +450,11 @@ class CrawlEngine:
         outlinks = f_outlinks.result()
         frontier_next = f_frontier.result()
         seen_delta = f_seen.result()
-        _t_writes = _time.monotonic()
-        # per-phase wall times of the last rounds (diagnostics; bounded)
-        self.step_timings.append(dict(
-            round=rnd, actions_s=round(_t_writes - _t_plan_done, 3)))
-        del self.step_timings[:-64]
         if self.ckpt:
-            # fold this round's new keys into the filter shards; the new
+            # fold this round's new keys into the Bloom shards; the new
             # shard directory becomes part of the round's atomic commit
-            update_shards = self._update_shards_fn()
-
             bloom_next = self.catalog.round_path(rnd, "bloom")
-            update_shards(
+            bloom.update_shards(
                 res.seen_new.select(F.xxhash64("key").alias("key_hash")),
                 self.bloom_dir, bloom_next, n_shards=self.bloom_shards,
             )

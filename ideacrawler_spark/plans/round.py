@@ -230,7 +230,6 @@ def run_round(
     shuffle_partitions: int = 32,
     bloom_dir: Optional[str] = None,
     bloom_shards: int = 64,
-    seen_filter: str = "bloom",
     global_budget: Optional[int] = None,
     n_pending: Optional[int] = None,
     host_budget_max: Optional[int] = None,
@@ -451,12 +450,11 @@ def run_round(
     firsts = first_occurrence(eligible)
     _probe_caches: list = []
     if bloom_dir is not None:
-        from ideacrawler_spark.operators import bloom, cuckoo
+        from ideacrawler_spark.operators import bloom
 
-        probe = cuckoo if seen_filter == "cuckoo" else bloom
         # persisted: both branches of the prefiltered anti-join read ONE
         # evaluation of the Python probe
-        flagged = probe.maybe_seen(
+        flagged = bloom.maybe_seen(
             firsts.withColumn("url_hash", F.xxhash64("url_norm")), bloom_dir,
             n_shards=bloom_shards).persist()
         _probe_caches.append(flagged)

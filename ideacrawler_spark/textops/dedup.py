@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ideacrawler_spark.textops.hashing import MINHASH_A, MINHASH_B, P31, h60
 
@@ -247,6 +248,18 @@ def dedup_components(pairs: DataFrame, max_iter: int = 20,
     frame so lineage stays flat; convergence is detected with a bounded
     `limit(1).count()` probe.
     """
+    # the label-sum convergence probe below needs INTEGRAL ids: a string
+    # cast yields NULL sums, and its decimal(38,0) cast drops the fractions
+    # of float/double/decimal(p,s>0) ids, so two different label states
+    # can sum alike — either way the loop would "converge" on wrong labels
+    for col in ("doc_a", "doc_b"):
+        id_type = pairs.schema[col].dataType
+        if not (isinstance(id_type, T.IntegralType)
+                or (isinstance(id_type, T.DecimalType) and id_type.scale == 0)):
+            raise TypeError(
+                f"dedup_components: doc ids must be integral for the "
+                f"label-sum convergence probe (got {col} "
+                f"{id_type.simpleString()}); hash string ids first")
     edges = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     edges = (
         edges.unionByName(
@@ -264,15 +277,7 @@ def dedup_components(pairs: DataFrame, max_iter: int = 20,
     # monotone decreasing until the fixpoint — equal consecutive sums ⇔
     # no label changed. One scan of the checkpointed frame per iteration
     # instead of a join of old vs new labels (decimal sum: exact, no
-    # 64-bit overflow at any plausible id range x corpus size). The probe
-    # needs NUMERIC ids — a non-numeric cast would yield NULL sums and
-    # silently "converge" on iteration one, so fail loudly instead.
-    id_type = dict(pairs.dtypes).get("doc_a", "")
-    if not (id_type.startswith(("int", "bigint", "smallint", "tinyint",
-                                "decimal", "long", "double", "float"))):
-        raise TypeError(
-            f"dedup_components: doc ids must be numeric for the label-sum "
-            f"convergence probe (got {id_type}); hash string ids first")
+    # 64-bit overflow at any plausible id range x corpus size).
 
     def _label_sum(frame):
         return frame.agg(

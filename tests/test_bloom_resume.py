@@ -57,12 +57,20 @@ def test_bloom_shards_on_fs_uri(spark, tmp_path):
     both = spark.range(0, 3000).union(spark.range(9000, 9500)).select(
         F.xxhash64("id").alias("url_hash"))
     assert bloom.maybe_seen(both, d2).filter(~F.col("_maybe_seen")).count() == 0
-    # cuckoo variant shares the same shardfs layer
-    from ideacrawler_spark.operators import cuckoo
 
-    c1 = "file://" + str(tmp_path / "c1")
-    cuckoo.update_shards(keys, None, c1)
-    assert cuckoo.maybe_seen(cand, c1).filter(~F.col("_maybe_seen")).count() == 0
+
+def test_bloom_shard_capacity_at_design_load():
+    """The M_BITS sizing: one shard at its share of the ~25M-key design
+    load has no false negatives and a false-positive rate under 1%."""
+    rng = np.random.default_rng(0)
+    lo, hi = np.iinfo(np.int64).min, np.iinfo(np.int64).max
+    keys = rng.integers(lo, hi, size=25_000_000 // bloom.N_SHARDS,
+                        dtype=np.int64)
+    fresh = rng.integers(lo, hi, size=200_000, dtype=np.int64)
+    arr = np.zeros(bloom.M_BITS // 8, dtype=np.uint8)
+    bloom._fold(arr, keys)
+    assert bloom._contains(arr, keys).all()
+    assert bloom._contains(arr, fresh).mean() < 0.01
 
 
 def _spec(**kw):
@@ -119,6 +127,34 @@ def test_crash_resume_equivalence(spark, web, web_dfs, tmp_path):
     assert _final_state(out2) == ref_state
 
 
+def test_resume_rejects_non_bloom_seen_filter(spark, web, web_dfs, tmp_path):
+    """A checkpoint whose manifest names another seen filter holds no Bloom
+    shards; read as Bloom it would call every seen URL unseen."""
+    import json
+    import os
+
+    pages_df, robots_df, _, _ = web_dfs
+    _, _, _, pushes = web
+    spec = _spec(max_rounds=1)
+    ck = str(tmp_path / "ck")
+    CrawlEngine(spark, spec, pages_df, robots_df, pushes, checkpoint_dir=ck,
+                shuffle_partitions=8, bloom_shards=8).run()
+    path = os.path.join(ck, "round=0", "_COMMIT.json")
+    with open(path) as f:
+        manifest = json.load(f)
+    manifest["seen_filter"] = "cuckoo"
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+    eng = CrawlEngine(spark, dataclasses.replace(spec, max_rounds=4),
+                      pages_df, robots_df, pushes, checkpoint_dir=ck,
+                      shuffle_partitions=8, bloom_shards=8)
+    with pytest.raises(ValueError, match="seen_filter"):
+        eng.run(resume=True)
+    assert eng.round == 0 and eng.frontier is None
+    assert sorted(n for n in os.listdir(ck) if n.startswith("round=")) \
+        == ["round=0"]
+
+
 def test_cancel_resume_equivalence(spark, web, web_dfs, tmp_path):
     """Live cancel (CancelJob analogue, worker.go:271-287): cancelling a
     DRAINING job between rounds, then resuming it, must equal the
@@ -155,45 +191,6 @@ def test_cancel_resume_equivalence(spark, web, web_dfs, tmp_path):
                        checkpoint_dir=ck, shuffle_partitions=8, bloom_shards=8)
     out2 = eng2.run(resume=True)
     assert _final_state(out2) == ref_state
-
-
-def test_cuckoo_shard_roundtrip(spark, tmp_path):
-    from ideacrawler_spark.operators import cuckoo
-    from pyspark.sql import functions as F
-
-    d1 = str(tmp_path / "c1")
-    keys = spark.range(0, 5000).select(F.xxhash64("id").alias("key_hash"))
-    cuckoo.update_shards(keys, None, d1, n_shards=8)
-    cand = spark.range(0, 5000).select(F.xxhash64("id").alias("url_hash"))
-    flagged = cuckoo.maybe_seen(cand, d1, n_shards=8)
-    assert flagged.filter(~F.col("_maybe_seen")).count() == 0  # no false negs
-    other = spark.range(100000, 120000).select(F.xxhash64("id").alias("url_hash"))
-    fp = cuckoo.maybe_seen(other, d1, n_shards=8).filter(F.col("_maybe_seen")).count()
-    assert fp / 20000 < 0.01
-    # incremental update keeps the superset invariant
-    d2 = str(tmp_path / "c2")
-    more = spark.range(50000, 51000).select(F.xxhash64("id").alias("key_hash"))
-    cuckoo.update_shards(more, d1, d2, n_shards=8)
-    both = spark.range(0, 5000).union(spark.range(50000, 51000)).select(
-        F.xxhash64("id").alias("url_hash"))
-    assert cuckoo.maybe_seen(both, d2, n_shards=8).filter(
-        ~F.col("_maybe_seen")).count() == 0
-
-
-def test_checkpointed_cuckoo_crawl_matches_refsim(spark, web, web_dfs, tmp_path):
-    pages, robots, seeds, pushes = web
-    pages_df, robots_df, _, _ = web_dfs
-    spec = _spec(job_id="cuckoo", depth=3, max_rounds=8)
-    golden = simulate(spec, pages, robots, pushes)
-    eng = CrawlEngine(spark, spec, pages_df, robots_df, pushes,
-                      checkpoint_dir=str(tmp_path / "ckc"), shuffle_partitions=8,
-                      bloom_shards=8, seen_filter="cuckoo")
-    out = eng.run()
-    got = [(r["fetch_seq"], r["url"]) for r in
-           out["order"].orderBy("fetch_seq").collect()]
-    want = [(o["fetch_seq"], o["url"]) for o in golden.order]
-    assert got == want
-    assert {r["key"] for r in out["seen"].collect()} == set(golden.seen)
 
 
 def test_seen_delta_layout_and_compaction(spark, web, web_dfs, tmp_path):

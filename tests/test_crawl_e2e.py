@@ -168,3 +168,40 @@ def test_callback_xpath_attr_and_text_spec(spark, web, web_dfs):
     golden, got = _run_both(spark, web, web_dfs, spec)
     _assert_match(golden, got)
     assert [s["url"] for s in golden.shipped] == ["http://hosta.example/p/2"]
+
+
+def test_subscribe_streams_each_round(spark, web, web_dfs):
+    """AddDomainAndListen analogue: the per-round subscription yields the
+    same shipped set as a plain run(), in round order; abandoning the
+    generator stops the crawl like a subscriber disconnect."""
+    from ideacrawler_spark.config import JobSpec
+    from ideacrawler_spark.plans.crawl import CrawlEngine
+
+    pages_df, robots_df, _, _ = web_dfs
+    spec = JobSpec(job_id="sub", seed_url="http://hosta.example/p/0",
+                   min_delay_s=1, round_seconds=10, max_concurrent=5,
+                   depth=3, max_rounds=8)
+    ref = CrawlEngine(spark, spec, pages_df, robots_df,
+                      shuffle_partitions=8).run()
+    want = sorted((r["fetch_seq"], r["url"], r["text"])
+                  for r in ref["shipped"].collect())
+
+    eng = CrawlEngine(spark, spec, pages_df, robots_df, shuffle_partitions=8)
+    got, rounds = [], []
+    for ev in eng.subscribe():
+        rounds.append(ev["round"])
+        got.extend((r["fetch_seq"], r["url"], r["text"])
+                   for r in ev["shipped"].collect())
+        assert ev["outlinks"] is not None
+        assert ev["metrics"]["round"] == ev["round"]
+    assert rounds == sorted(rounds)
+    assert sorted(got) == want
+
+    # disconnect mid-crawl: no further rounds run
+    eng2 = CrawlEngine(spark, spec, pages_df, robots_df, shuffle_partitions=8)
+    it = eng2.subscribe()
+    next(it)
+    it.close()  # subscriber goes away
+    r_at_close = eng2.round
+    assert eng2.round == r_at_close  # nothing advances afterwards
+    assert eng2.round < ref["rounds"]

@@ -2,7 +2,7 @@
 
 - seed and push rows built through Arrow equal ``createDataFrame(list)``,
   and the driver-local robots dim equals the one it was collected from;
-- the Bloom/cuckoo-prefiltered anti-join equals the exact anti-join, and
+- the Bloom-prefiltered anti-join equals the exact anti-join, and
   a round probes each candidate once;
 - the robots UDF runs on one task only when a round's pending rows fit
   in one Arrow batch;
@@ -14,7 +14,7 @@ from pyspark import SparkContext
 from pyspark.sql import functions as F
 
 from ideacrawler_spark.config import JobSpec
-from ideacrawler_spark.operators import bloom, cuckoo
+from ideacrawler_spark.operators import bloom
 from ideacrawler_spark.operators.dedup import (
     anti_join_seen, prefiltered_anti_join)
 from ideacrawler_spark.plans.catalog import ParquetManifestCatalog
@@ -130,27 +130,26 @@ def test_prefiltered_anti_join_matches_exact(spark, tmp_path):
     cand = spark.createDataFrame(
         [(k, i) for i, k in enumerate(seen_keys[::2] + false_pos + fresh)],
         "url_norm string, link_pos int")
-    # the filters hold the false-positive keys too, so those take the exact
+    # the filter holds the false-positive keys too, so those take the exact
     # path and must survive it
     in_filter = spark.createDataFrame(
         [(k,) for k in seen_keys + false_pos], "key string") \
         .select(F.xxhash64("key").alias("key_hash"))
     want = sorted(anti_join_seen(cand, seen).collect())
     assert len(want) == len(false_pos) + len(fresh)
-    for mod in (bloom, cuckoo):
-        d = str(tmp_path / mod.__name__.rsplit(".", 1)[1])
-        mod.update_shards(in_filter, None, d, n_shards=4)
-        flagged = mod.maybe_seen(
-            cand.withColumn("url_hash", F.xxhash64("url_norm")), d,
-            n_shards=4).persist()
-        try:
-            assert flagged.filter("_maybe_seen").count() \
-                >= len(seen_keys) // 2 + len(false_pos)
-            got = prefiltered_anti_join(flagged, seen)
-            assert sorted(got.collect()) == want
-            assert got.columns == cand.columns
-        finally:
-            flagged.unpersist()
+    d = str(tmp_path / "bloom")
+    bloom.update_shards(in_filter, None, d, n_shards=4)
+    flagged = bloom.maybe_seen(
+        cand.withColumn("url_hash", F.xxhash64("url_norm")), d,
+        n_shards=4).persist()
+    try:
+        assert flagged.filter("_maybe_seen").count() \
+            >= len(seen_keys) // 2 + len(false_pos)
+        got = prefiltered_anti_join(flagged, seen)
+        assert sorted(got.collect()) == want
+        assert got.columns == cand.columns
+    finally:
+        flagged.unpersist()
 
 
 def test_round_probes_seen_filter_once(spark, web_dfs, tmp_path):
@@ -159,8 +158,6 @@ def test_round_probes_seen_filter_once(spark, web_dfs, tmp_path):
                    min_delay_s=1, round_seconds=10)
     eng = CrawlEngine(spark, spec, pages_df, robots_df, shuffle_partitions=8)
     eng._init_state()
-    # the Bloom and the cuckoo probe share this path in run_round; their
-    # anti-join results are compared above
     d = str(tmp_path / "bloom")
     bloom.update_shards(eng.seen.select(F.xxhash64("key").alias("key_hash")),
                         None, d, n_shards=4)

@@ -437,6 +437,33 @@ def test_dedup_components_long_chain_pointer_jumping(spark):
     assert len(partial) == n + 1
 
 
+def test_dedup_components_accepts_only_integral_ids(spark):
+    """The label-sum convergence probe sums ids as decimal(38,0), which
+    drops fractions: fractional id types are refused, and decimal(p,0)
+    ids give the same components as bigint ids."""
+    import pytest
+
+    from ideacrawler_spark.textops.dedup import dedup_components
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 40), (5, 6)], "doc_a long, doc_b long")
+
+    def as_type(t, frac="0"):
+        return pairs.selectExpr(f"cast(doc_a + {frac} as {t}) doc_a",
+                                f"cast(doc_b + {frac} as {t}) doc_b")
+
+    for t in ("double", "decimal(10,2)"):
+        with pytest.raises(TypeError, match="integral"):
+            dedup_components(as_type(t, "0.25"))
+
+    def comps(df):
+        return {int(r["doc_id"]): int(r["component"])
+                for r in dedup_components(df).collect()}
+
+    assert comps(as_type("decimal(12,0)")) == comps(as_type("bigint")) \
+        == {1: 1, 2: 1, 3: 1, 40: 1, 5: 5, 6: 5}
+
+
 def test_stratified_sample_exact_hash_rule(spark):
     """Hash sampling is deterministic and matches the independent md5
     arithmetic exactly (the oracle's rule, recomputed driver-side)."""
