@@ -6,16 +6,20 @@ memory-feasible nor parallel. Here:
 
 - the seen-set's EXACT table stays authoritative (bit-for-bit guarantee);
 - a Bloom filter sharded by ``url_hash % n_shards`` prefilters the
-  anti-join: rows the shard proves unseen (the overwhelming majority in a
-  growing crawl) skip the expensive join entirely; only maybe-seen rows
-  (true hits + false positives) take the exact path. False negatives are
-  impossible, so results are identical with the filter on or off — the
-  e2e suite runs both ways to prove it;
+  anti-join once the seen-set is too large for a hash build
+  (``plans/round.py`` gates it on Spark's own size rule; below that
+  bound an exact hash anti-join beats any probe): rows the shard proves
+  unseen skip the join entirely; only maybe-seen rows (true hits +
+  false positives) take the exact path. False negatives are impossible,
+  so results are identical with the filter on or off;
 - shards are numpy bitsets persisted per round next to the engine
-  checkpoint (parquet+manifest here; Iceberg snapshots in production) and
-  updated inside ``applyInPandas`` — each task touches exactly one shard
-  file, the batch arrives as Arrow, and the membership test is vectorized
-  numpy over the whole batch (no per-row Python);
+  checkpoint (parquet+manifest here; Iceberg snapshots in production).
+  A round folds its new keys on the driver when they fit one Arrow batch
+  (one JVM-only collect of their hashes, no Python task), else inside
+  ``applyInPandas`` — each task touches exactly one shard file, the batch
+  arrives as Arrow. Both paths run the same per-shard kernel, and the
+  membership test is vectorized numpy over the whole batch (no per-row
+  Python);
 - ALL shard IO goes through ``operators/shardfs.py`` (pyarrow.fs), so a
   checkpoint dir on hdfs:// or s3:// works from executors without a
   shared local disk — the round-1 local-``os.path`` dependence is gone.
@@ -28,7 +32,7 @@ h1 = low 32 bits, h2 = high 32 bits | 1.
 from __future__ import annotations
 
 import io
-from typing import Iterator
+from typing import Iterator, Optional
 
 import numpy as np
 import pandas as pd
@@ -83,11 +87,26 @@ def _save_shard(path: str, arr_bytes: bytes) -> None:
     shardfs.write_bytes_atomic(path, arr_bytes)
 
 
+def _fold_shard(out_dir: str, shard: int, hashes: np.ndarray) -> None:
+    """Fold ``hashes`` (all of one shard) into that shard's file."""
+    arr = _load_shard(out_dir, shard)
+    _fold(arr, hashes)
+    buf = io.BytesIO()
+    np.save(buf, arr)
+    _save_shard(_shard_path(out_dir, shard), buf.getvalue())
+
+
 def update_shards(seen_new: DataFrame, prev_dir: str | None, out_dir: str,
-                  hash_col: str = "key_hash", n_shards: int = N_SHARDS) -> None:
+                  hash_col: str = "key_hash", n_shards: int = N_SHARDS,
+                  n_keys: Optional[int] = None) -> None:
     """Fold new keys into the Bloom shards: read round r-1 shards, write
-    round r shards (copy-forward untouched ones). One applyInPandas group
-    per shard — the task-local file IS the Arrow-backed partition state."""
+    round r shards (copy-forward untouched ones).
+
+    ``n_keys`` bounds the rows of ``seen_new``. When they fit in one Arrow
+    batch, their hashes are collected (a JVM-only job) and the touched
+    shards are folded on the driver. Otherwise, or when the count is
+    unknown, there is one applyInPandas group per shard — the task-local
+    file IS the Arrow-backed partition state."""
     shardfs.makedirs(out_dir)
     if prev_dir:
         for name in shardfs.listdir(prev_dir):
@@ -95,6 +114,17 @@ def update_shards(seen_new: DataFrame, prev_dir: str | None, out_dir: str,
                 dst = shardfs.join(out_dir, name)
                 if not shardfs.exists(dst):
                     shardfs.copy_file(shardfs.join(prev_dir, name), dst)
+    batch = int(seen_new.sparkSession.conf.get(
+        "spark.sql.execution.arrow.maxRecordsPerBatch"))
+    if n_keys is not None and 0 < batch and n_keys <= batch:
+        if n_keys == 0:
+            return
+        h = np.array([r[0] for r in seen_new.select(hash_col).collect()],
+                     dtype=np.int64)
+        shards = np.mod(h, n_shards)  # the sign of the divisor, like pmod
+        for s in np.unique(shards):
+            _fold_shard(out_dir, int(s), h[shards == s])
+        return
 
     df = seen_new.select(F.col(hash_col).alias("h")).withColumn(
         "shard", shard_of(F.col("h"), n_shards)
@@ -104,11 +134,7 @@ def update_shards(seen_new: DataFrame, prev_dir: str | None, out_dir: str,
         if not len(pdf):
             return pd.DataFrame({"shard": [], "n": []})
         shard = int(pdf["shard"].iloc[0])
-        arr = _load_shard(out_dir, shard)
-        _fold(arr, pdf["h"].to_numpy())
-        buf = io.BytesIO()
-        np.save(buf, arr)
-        _save_shard(_shard_path(out_dir, shard), buf.getvalue())
+        _fold_shard(out_dir, shard, pdf["h"].to_numpy())
         return pd.DataFrame({"shard": [shard], "n": [len(pdf)]})
 
     (

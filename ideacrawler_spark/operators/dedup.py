@@ -10,9 +10,11 @@ Batch equivalents:
 - ACROSS rounds: left-anti join against the exact ``seen`` table
   (key = the exact string the reference would have used: nurl for links,
   the raw seed string for seeds — job.go:776 inserts the seed unnormalized);
-- at scale the anti-join is prefiltered by sharded Bloom filters
-  (operators/bloom.py): definitely-new rows skip the join entirely, the
-  exact table stays authoritative so the seen-set remains bit-for-bit.
+- a seen-set too large for a hash build is prefiltered by sharded Bloom
+  filters (operators/bloom.py): definitely-new rows skip the join
+  entirely, the exact table stays authoritative so the seen-set remains
+  bit-for-bit. Below that bound the exact hash anti-join is cheaper than
+  any probe; :func:`seen_row_bytes` sizes the seen-set for the gate.
 """
 
 from __future__ import annotations
@@ -41,6 +43,18 @@ def first_occurrence(candidates: DataFrame, key: str = "url_norm",
     )
 
 
+def seen_row_bytes(key: str) -> int:
+    """Bytes of one seen row in a hash build: the UnsafeRow of one string
+    column is an 8-byte null bitset, an 8-byte offset-and-length word and
+    the UTF-8 bytes padded to a multiple of 8."""
+    return 16 + 8 * -(-len(key.encode("utf-8")) // 8)
+
+
+def seen_row_bytes_col(key):
+    """:func:`seen_row_bytes` as a Column over the string Column ``key``."""
+    return F.lit(16) + F.lit(8) * F.ceil(F.octet_length(key) / F.lit(8))
+
+
 def anti_join_seen(candidates: DataFrame, seen: DataFrame,
                    key: str = "url_norm", seen_key: str = "key",
                    partitioned: bool = False) -> DataFrame:
@@ -59,11 +73,15 @@ def anti_join_seen(candidates: DataFrame, seen: DataFrame,
     that exchange instead of re-shuffling every candidate row on the
     hash-led composite, and the seen side carries a SHUFFLE_HASH hint: a
     hash anti-probe needs no sort on either side (the hash-led key only
-    paid off by making sort-merge compares cheap). The per-partition build
-    side is |seen| / shuffle-partitions — bounded; at the 10^10 design
-    point the production path prefilters through the Bloom shards
-    (operators/bloom.py, :func:`prefiltered_anti_join`) so the exact join
-    only ever sees the maybe-seen remainder."""
+    paid off by making sort-merge compares cheap). ShuffledHashJoin's
+    build side does not spill, so the caller must bound the per-partition
+    build side |seen| / shuffle-partitions: the crawl round passes
+    ``partitioned=True`` only while the seen-set's hash-build bytes
+    (:func:`seen_row_bytes`) pass Spark's ``canBuildLocalHashMapBySize``
+    rule. Above it a checkpointed crawl prefilters through the Bloom
+    shards (operators/bloom.py, :func:`prefiltered_anti_join`), so the
+    exact join only sees the maybe-seen remainder, and an in-memory crawl
+    takes the default sort-merge path, which spills."""
     if partitioned:
         s = seen.select(F.col(seen_key).alias(key)).hint("SHUFFLE_HASH")
         return candidates.join(s, on=[key], how="left_anti")

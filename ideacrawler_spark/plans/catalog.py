@@ -30,17 +30,24 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Optional
+from typing import Dict, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 class ParquetManifestCatalog:
-    """Iceberg-snapshot-protocol stand-in over parquet + JSON manifests."""
+    """Iceberg-snapshot-protocol stand-in over parquet + JSON manifests.
 
-    def __init__(self, spark: SparkSession, root: str):
+    ``schemas`` maps table names to the schema their writer declares;
+    ``read``/``read_aux`` use it, where a plain read starts one job per
+    table to infer the schema from the footers."""
+
+    def __init__(self, spark: SparkSession, root: str,
+                 schemas: Optional[Dict[str, T.StructType]] = None):
         self.spark = spark
         self.root = root
+        self.schemas = dict(schemas or {})
 
     # ---- paths ----------------------------------------------------------
     def round_path(self, rnd: int, table: str) -> str:
@@ -66,10 +73,16 @@ class ParquetManifestCatalog:
         return self.spark.read.schema(df.schema).parquet(path)
 
     def read(self, rnd: int, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.round_path(rnd, table))
+        return self._read(table, self.round_path(rnd, table))
 
     def read_aux(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self.aux_path(name))
+        return self._read(name, self.aux_path(name))
+
+    def _read(self, table: str, path: str) -> DataFrame:
+        schema = self.schemas.get(table)
+        if schema is None:
+            return self.spark.read.parquet(path)
+        return self.spark.read.schema(schema).parquet(path)
 
     def has_table(self, rnd: int, table: str) -> bool:
         return os.path.isdir(self.round_path(rnd, table))

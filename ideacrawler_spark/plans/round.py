@@ -30,7 +30,8 @@ from ideacrawler_spark.functions.robots import robots_allowed_udf
 from ideacrawler_spark.functions.urlnorm import host_raw, resolve_canon_udf
 from ideacrawler_spark.operators.admission import admit_budget
 from ideacrawler_spark.operators.dedup import (
-    anti_join_seen, first_occurrence, prefiltered_anti_join)
+    anti_join_seen, first_occurrence, prefiltered_anti_join,
+    seen_row_bytes_col)
 from ideacrawler_spark.operators.rank import global_rank
 
 # pandas UDFs are plan-level objects: constructing one costs py4j round
@@ -153,6 +154,10 @@ def _static_exprs(mimetype: str, child_method: str, shuffle_partitions: int):
             F.col("content_type").alias("_ctype"),
         ],
         seen_key=F.col("url_norm").alias("key"),
+        new_aggs=[
+            F.count("*").alias("n_new"),
+            F.sum(seen_row_bytes_col(F.col("url_norm"))).alias("new_bytes"),
+        ],
     )
 
 
@@ -161,6 +166,7 @@ FRONTIER_SCHEMA = (
     "anchor string, meta string, method string, pushed boolean, "
     "no_callback boolean"
 )
+FRONTIER_COLUMNS = [f.split()[0] for f in FRONTIER_SCHEMA.split(", ")]
 SHIPPED_SCHEMA = (
     "fetch_seq long, url string, depth int, anchor_text string, meta string, "
     "status int, text string, success boolean, round int"
@@ -217,6 +223,16 @@ def _one_task_if_one_batch(spark: SparkSession, df: DataFrame,
     return df
 
 
+def _hash_build_fits(spark: SparkSession, build_bytes: int) -> bool:
+    """Spark's own ``canBuildLocalHashMapBySize`` rule: a build side of
+    ``build_bytes`` may be hashed per partition when it is smaller than
+    ``autoBroadcastJoinThreshold`` times the shuffle partitions. A
+    threshold of -1 (joins by size disabled) never passes."""
+    conf = spark._jsparkSession.sessionState().conf()
+    return build_bytes < conf.autoBroadcastJoinThreshold() \
+        * conf.numShufflePartitions()
+
+
 def run_round(
     spark: SparkSession,
     spec: JobSpec,
@@ -233,6 +249,7 @@ def run_round(
     global_budget: Optional[int] = None,
     n_pending: Optional[int] = None,
     host_budget_max: Optional[int] = None,
+    seen_bytes: Optional[int] = None,
 ) -> RoundResult:
     metrics = dict(round=rnd)
     if global_budget is None:
@@ -446,10 +463,16 @@ def run_round(
     elig_counts = eligible.agg(F.count("*").alias("n_eligible"))
 
     # ---- dedup: in-round first occurrence, then anti-join the seen table.
-    #      With a Bloom checkpoint, provably-new rows skip the join (D1).
+    #      ``seen_bytes`` (the seen-set's hash-build size, None if unknown)
+    #      picks the join. Below Spark's hash-build bound the exact hash
+    #      anti-join reuses firsts' exchange and costs less than any probe.
+    #      Above it, or unknown, a Bloom checkpoint lets provably-new rows
+    #      skip the join (D1); without one, a known-large seen-set takes
+    #      the sort-merge join, which spills.
     firsts = first_occurrence(eligible)
+    fits = seen_bytes is not None and _hash_build_fits(spark, seen_bytes)
     _probe_caches: list = []
-    if bloom_dir is not None:
+    if bloom_dir is not None and not fits:
         from ideacrawler_spark.operators import bloom
 
         # persisted: both branches of the prefiltered anti-join read ONE
@@ -460,10 +483,12 @@ def run_round(
         _probe_caches.append(flagged)
         new_firsts = prefiltered_anti_join(flagged, seen).persist()
     else:
-        # firsts comes straight out of the groupBy(url_norm) — the anti-
-        # join reuses that exchange and hash-probes the seen side unsorted
-        new_firsts = anti_join_seen(firsts, seen, partitioned=True).persist()
-    new_counts = new_firsts.agg(F.count("*").alias("n_new"))
+        # firsts comes straight out of the groupBy(url_norm): the
+        # partitioned anti-join reuses that exchange and hash-probes the
+        # seen side unsorted
+        new_firsts = anti_join_seen(
+            firsts, seen, partitioned=fits or seen_bytes is None).persist()
+    new_counts = new_firsts.agg(*X["new_aggs"])
 
     # ---- cross-domain quirk (job.go:842-845): mark seen, don't enqueue.
     #      The CHILD host is lowercase (purell mutated u.Host before
@@ -555,7 +580,8 @@ def run_round(
     metrics["counters"] = counters
     result = RoundResult(
         shipped=shipped,
-        frontier_next=carried.unionByName(enq),
+        # in FRONTIER_SCHEMA's column order, the schema resume() reads with
+        frontier_next=carried.unionByName(enq).select(*FRONTIER_COLUMNS),
         seen_new=seen_new,
         outlinks=outlinks,
         metrics=metrics,
