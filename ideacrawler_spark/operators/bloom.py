@@ -102,18 +102,21 @@ def update_shards(seen_new: DataFrame, prev_dir: str | None, out_dir: str,
     """Fold new keys into the Bloom shards: read round r-1 shards, write
     round r shards (copy-forward untouched ones).
 
+    ``out_dir`` is emptied first: a round re-run after a crash between its
+    fold and its commit must fold into round r-1's shards, not into the
+    ones the crashed attempt left there.
+
     ``n_keys`` bounds the rows of ``seen_new``. When they fit in one Arrow
     batch, their hashes are collected (a JVM-only job) and the touched
     shards are folded on the driver. Otherwise, or when the count is
     unknown, there is one applyInPandas group per shard — the task-local
     file IS the Arrow-backed partition state."""
-    shardfs.makedirs(out_dir)
+    shardfs.reset_dir(out_dir)
     if prev_dir:
         for name in shardfs.listdir(prev_dir):
             if name.startswith("shard=") and not name.endswith(".tmp"):
-                dst = shardfs.join(out_dir, name)
-                if not shardfs.exists(dst):
-                    shardfs.copy_file(shardfs.join(prev_dir, name), dst)
+                shardfs.copy_file(shardfs.join(prev_dir, name),
+                                  shardfs.join(out_dir, name))
     batch = int(seen_new.sparkSession.conf.get(
         "spark.sql.execution.arrow.maxRecordsPerBatch"))
     if n_keys is not None and 0 < batch and n_keys <= batch:

@@ -63,7 +63,9 @@ def global_rank(df: DataFrame, order_cols, out_col: str = "rank",
     un-cached upstream (see inline note).
 
     ``small_hint``: a caller-KNOWN upper bound on the row count (e.g. the
-    round's admission budget). When it proves the input fits in one task
+    round's admission budget); an exact count of the input (e.g. the
+    crawl round's counters row for the rows it enqueues) is a proven
+    bound too. When it proves the input fits in one task
     (≤ SMALL_RANK_ROWS), rank via a single-exchange window instead —
     ``repartitionByRange`` costs a range-SAMPLING job plus a shuffle,
     pure overhead for small-bounded rounds, and the single partition does

@@ -40,16 +40,11 @@ def join(base: str, name: str) -> str:
     return base.rstrip("/") + "/" + name
 
 
-def exists(path: str) -> bool:
-    from pyarrow import fs as pafs
-
-    f, p = fs_and_path(path)
-    return f.get_file_info(p).type != pafs.FileType.NotFound
-
-
-def makedirs(path: str) -> None:
+def reset_dir(path: str) -> None:
+    """Make ``path`` an empty directory: what it held is deleted."""
     f, p = fs_and_path(path)
     f.create_dir(p, recursive=True)
+    f.delete_dir_contents(p)
 
 
 def listdir(path: str) -> List[str]:

@@ -19,6 +19,7 @@ into the parquet scans.
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -115,25 +116,23 @@ def _static_exprs(mimetype: str, child_method: str, shuffle_partitions: int):
             F.col("_res.host_raw").alias("host_raw"),
             F.col("_res.host").alias("host"),
         ],
-        adm_aggs=[
-            F.count("*").alias("admitted"),
-            F.sum(F.when(~F.col("_allowed"), 1).otherwise(0))
-            .alias("robots_denied"),
-        ],
-        fetch_aggs=[
-            F.count("*").alias("fetched"),
-            F.sum(
+        adm_counts=_counter_map(
+            admitted=F.count("*"),
+            robots_denied=F.sum(F.when(~F.col("_allowed"), 1).otherwise(0)),
+        ),
+        fetch_counts=_counter_map(
+            fetched=F.count("*"),
+            errors=F.sum(
                 F.when(
                     (F.col("_ctype_base") == mimetype)
                     & (F.col("method") == "GET") & ~F.col("no_callback")
                     & (F.col("_status") >= 400) & (F.col("_status") < 600),
                     1,
                 ).otherwise(0)
-            ).alias("errors"),
-        ],
-        enq_aggs=[
-            F.count("*").alias("n_enq"), F.max("seq").alias("max_seq"),
-        ],
+            ),
+        ),
+        elig_counts=_counter_map(n_eligible=F.count("*")),
+        enq_counts=_counter_map(n_enq=F.count("*")),
         shard=F.pmod(F.xxhash64(F.col("host")),
                      F.lit(shuffle_partitions)).cast("int").alias("shard"),
         pm_aggs=[
@@ -154,11 +153,26 @@ def _static_exprs(mimetype: str, child_method: str, shuffle_partitions: int):
             F.col("content_type").alias("_ctype"),
         ],
         seen_key=F.col("url_norm").alias("key"),
-        new_aggs=[
-            F.count("*").alias("n_new"),
-            F.sum(seen_row_bytes_col(F.col("url_norm"))).alias("new_bytes"),
-        ],
+        new_counts=_counter_map(
+            n_new=F.count("*"),
+            new_bytes=F.sum(seen_row_bytes_col(F.col("url_norm"))),
+        ),
+        logged_out_counts=_counter_map(n_logged_out=F.count("*")),
+        block_counts=_counter_map(
+            n_url_blocked=F.sum(F.when(F.col("_url_blocked"), 1).otherwise(0))),
     )
+
+
+def _counter_map(**aggs):
+    """Named single-row aggregates as ONE ``map<string, bigint>`` column.
+
+    Counts and sums of ints are all bigint, so every counters frame of a
+    round has the same schema and they union into one job, where a ``crossJoin`` chain of single-row frames
+    plans one broadcast job per join. A map keeps every name, a null
+    value included (a sum over zero rows)."""
+    return F.create_map(*(
+        x for name, agg in aggs.items() for x in (F.lit(name), agg))
+    ).alias("counts")
 
 
 FRONTIER_SCHEMA = (
@@ -175,15 +189,58 @@ SEEN_SCHEMA = "key string"
 
 
 class RoundResult:
-    def __init__(self, shipped, frontier_next, seen_new, outlinks, metrics,
-                 n_fetched, n_children):
+    """One round's outputs, as lazy frames. The counters row sizes the
+    round's tail: ``frontier_next`` and ``seen_delta`` are built from its
+    exact counts, so the driver builds them after collecting it."""
+
+    def __init__(self, spark, shipped, carried, enq, seq_offset,
+                 shuffle_partitions, seen_new, outlinks, counters, metrics,
+                 cached):
         self.shipped = shipped
-        self.frontier_next = frontier_next  # carried + head requeues + children (no pushes)
         self.seen_new = seen_new            # NEW seen keys discovered this round
         self.outlinks = outlinks
         self.metrics = metrics              # dict of lineage counters
-        self.n_fetched = n_fetched
-        self.n_children = n_children
+        self._spark = spark
+        self._carried = carried             # frontier rows not admitted
+        self._enq = enq                     # children + HEAD requeues, unranked
+        self._seq_offset = seq_offset
+        self._nparts = shuffle_partitions
+        self._counters = counters
+        # every persisted frame of the round, released by the driver once
+        # the outputs are materialized (including those the tail persists)
+        self._cached = cached
+
+    def counters(self) -> dict:
+        """Collect ALL round counters in one job, as name -> int.
+
+        SQL sums over zero rows are null; they read as 0 here. The login
+        and URL-gating counters exist only when their feature is on."""
+        out = dict(n_logged_out=0, n_url_blocked=0)
+        for row in self._counters.collect():
+            out.update(row["counts"])
+        return {k: int(v or 0) for k, v in out.items()}
+
+    def frontier_next(self, n_enq: int, n_front: int) -> DataFrame:
+        """carried + HEAD requeues + children (no pushes), in
+        FRONTIER_SCHEMA's column order (the schema resume() reads with).
+
+        The new rows get discovery sequence numbers from ``seq_offset``
+        on, ordered exactly as the reference's enqueue counter would fire
+        (parent fetch order, then link position; HEAD requeue at pos -1).
+        ``n_enq``, the counters row's exact count of them, is the rank's
+        row bound; ``n_front`` = carried + ``n_enq`` is the output's."""
+        enq = global_rank(
+            self._enq, ["parent_depth", "parent_seq", "link_pos"],
+            out_col="seq", offset=self._seq_offset,
+            num_partitions=self._nparts, track=self._cached,
+            small_hint=n_enq,
+        ).drop("parent_depth", "parent_seq", "link_pos")
+        out = self._carried.unionByName(enq).select(*FRONTIER_COLUMNS)
+        return _one_task_if_one_batch(self._spark, out, n_front)
+
+    def seen_delta(self, n_new: int) -> DataFrame:
+        """The new seen keys, bounded by the counters row's ``n_new``."""
+        return _one_task_if_one_batch(self._spark, self.seen_new, n_new)
 
 
 def _host_budget_col(spec: JobSpec):
@@ -209,14 +266,19 @@ def _host_budget_col_cached(impolite: bool, eff: float,
 
 def _one_task_if_one_batch(spark: SparkSession, df: DataFrame,
                            row_bound: Optional[int]) -> DataFrame:
-    """Coalesce ``df`` to ONE task ahead of a pandas UDF when at most
-    ``row_bound`` rows, which fit in one Arrow batch, reach it.
+    """Coalesce ``df`` to ONE task when at most ``row_bound`` rows, which
+    fit in one Arrow batch, reach it: ahead of a pandas UDF, and for a
+    small output written as one file.
 
     Every Python task pays a fixed worker set-up cost whatever its row
-    count (~0.2 CPU-s with PySpark 4.1 on a 4-core x86 host), so a
-    handful of rows spread over the shuffle partitions pays it that many
-    times. Coalescing is narrow (no shuffle). A larger input, or a batch
-    size of zero or less (no limit), keeps its partitioning."""
+    count. With PySpark 4.1 on Python 3.11, about 100-130 ms of each
+    Python evaluation goes to the per-task ``importlib.invalidate_caches()``:
+    the worker's ``sys.path`` holds ``pyspark.zip``, the py4j zip and the
+    spark-core jar, and every zipimporter re-reads its archive directory
+    on each call. So a handful of rows spread over the shuffle partitions
+    pays it that many times; a write pays a task and a file per
+    partition. Coalescing is narrow (no shuffle). A larger input, or a
+    batch size of zero or less (no limit), keeps its partitioning."""
     batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
     if row_bound is not None and 0 < batch and row_bound <= batch:
         return df.coalesce(1)
@@ -295,7 +357,7 @@ def run_round(
         )
     allowed = allowed.persist()
     # admission counters fold into the single end-of-round counters job
-    adm_counts = allowed.agg(*X["adm_aggs"])
+    adm_counts = allowed.agg(X["adm_counts"])
     fetchable = allowed.filter(F.col("_allowed")).drop(
         "_allowed", "crawl_delay", "rules")
 
@@ -325,7 +387,7 @@ def run_round(
         .drop("_page_url", "_ctype")
         .persist()
     )
-    fetch_counts = fetched.agg(*X["fetch_aggs"])
+    fetch_counts = fetched.agg(X["fetch_counts"])
 
     # mimetype mux (job.go:620-623): non-matching pages are not handled at
     # all — except, with follow_feeds, feed-typed pages, which are handled
@@ -422,8 +484,11 @@ def run_round(
     ).select(*X["resolved_post"]) \
         .filter(F.col("url_norm").isNotNull()).persist()
 
-    # ---- analyzed-URLs sink (job.go:815,874-893): per-page outlink set ---
-    outlinks = resolved.groupBy("parent_url").agg(*X["outlink_aggs"])
+    # ---- analyzed-URLs sink (job.go:815,874-893): per-page outlink set;
+    #      one row per fetched page, so at most admit_bound rows
+    outlinks = _one_task_if_one_batch(
+        spark, resolved.groupBy("parent_url").agg(*X["outlink_aggs"]),
+        admit_bound)
 
     # ---- eligibility (job.go:792-806) ------------------------------------
     req_match = F.lit(True)
@@ -452,15 +517,13 @@ def run_round(
             eligible_all, spec, url_col="url_norm", host_col="host",
         ).persist()
         _gate_caches.append(gated)
-        block_counts = gated.agg(
-            F.sum(F.when(F.col("_url_blocked"), 1).otherwise(0))
-            .alias("n_url_blocked"))
+        block_counts = gated.agg(X["block_counts"])
         eligible = drop_gating_cols(
             gated.filter(~F.col("_url_blocked"))).persist()
     else:
         block_counts = None
         eligible = eligible_all.persist()
-    elig_counts = eligible.agg(F.count("*").alias("n_eligible"))
+    elig_counts = eligible.agg(X["elig_counts"])
 
     # ---- dedup: in-round first occurrence, then anti-join the seen table.
     #      ``seen_bytes`` (the seen-set's hash-build size, None if unknown)
@@ -488,7 +551,7 @@ def run_round(
         # seen side unsorted
         new_firsts = anti_join_seen(
             firsts, seen, partitioned=fits or seen_bytes is None).persist()
-    new_counts = new_firsts.agg(*X["new_aggs"])
+    new_counts = new_firsts.agg(X["new_counts"])
 
     # ---- cross-domain quirk (job.go:842-845): mark seen, don't enqueue.
     #      The CHILD host is lowercase (purell mutated u.Host before
@@ -506,15 +569,10 @@ def run_round(
 
     children = children_src.select(*X["children"])
 
-    # ---- discovery sequence numbers: children + HEAD requeues jointly,
-    #      ordered exactly as the reference's enqueue counter would fire
-    #      (parent fetch order, then link position; HEAD requeue at pos -1)
+    # ---- the rows this round enqueues: children + HEAD requeues. They
+    #      are counted here and ranked into frontier_next by the driver
+    #      once their exact count is known (RoundResult.frontier_next).
     enq = children.unionByName(head_requeues)
-    enq = global_rank(
-        enq, ["parent_depth", "parent_seq", "link_pos"], out_col="seq",
-        offset=seq_offset, num_partitions=shuffle_partitions,
-        track=_rank_caches,
-    ).drop("parent_depth", "parent_seq", "link_pos")
 
     seen_new = new_firsts.select(X["seen_key"])
 
@@ -545,53 +603,37 @@ def run_round(
     # ---- per-partition lineage metrics (D3): one row per host-hash shard.
     #      The reference only logs ad hoc (job.go:207,865); the engine keeps
     #      auditable counts per shard per round.
-    part_metrics = (
+    #      At most shuffle_partitions rows, one per shard.
+    part_metrics = _one_task_if_one_batch(spark, (
         allowed.groupBy(X["shard"])
         .agg(*X["pm_aggs"])
         .withColumn("round", F.lit(rnd))
         .withColumn("retried", F.lit(0))  # reference never retries
         # (fetch.go:415-425: errors and robots-denials drop, no requeue)
-    )
+    ), shuffle_partitions)
     metrics["retried"] = 0
     metrics["part_metrics"] = part_metrics  # DataFrame; driver materializes
 
     metrics["order"] = order_cols  # DataFrame; driver materializes
-    # ---- ALL round counters as ONE single-row DataFrame: the driver
-    #      collects it once after the output writes have populated the
-    #      caches, so the whole round costs exactly one metrics action
-    #      (VERDICT r01: four separate collects were the round-latency
-    #      floor).
-    enq_counts = enq.agg(*X["enq_aggs"])
-    counters = (
-        adm_counts.crossJoin(fetch_counts)
-        .crossJoin(elig_counts)
-        .crossJoin(new_counts)
-        .crossJoin(enq_counts)
-    )
+    # ---- ALL round counters in ONE job: the single-row aggregates union
+    #      into one frame, collected once (VERDICT r01: four separate
+    #      collects were the round-latency floor)
+    counters = [adm_counts, fetch_counts, elig_counts, new_counts,
+                enq.agg(X["enq_counts"])]
     if login_guard:
-        counters = counters.crossJoin(
-            logged_out.agg(F.count("*").alias("n_logged_out")))
-    else:
-        counters = counters.withColumn("n_logged_out", F.lit(0))
+        counters.append(logged_out.agg(X["logged_out_counts"]))
     if block_counts is not None:
-        counters = counters.crossJoin(block_counts)
-    else:
-        counters = counters.withColumn("n_url_blocked", F.lit(0))
-    metrics["counters"] = counters
-    result = RoundResult(
-        shipped=shipped,
-        # in FRONTIER_SCHEMA's column order, the schema resume() reads with
-        frontier_next=carried.unionByName(enq).select(*FRONTIER_COLUMNS),
-        seen_new=seen_new,
-        outlinks=outlinks,
+        counters.append(block_counts)
+    return RoundResult(
+        spark, shipped=shipped, carried=carried, enq=enq,
+        seq_offset=seq_offset, shuffle_partitions=shuffle_partitions,
+        seen_new=seen_new, outlinks=outlinks,
+        counters=reduce(DataFrame.union, counters).coalesce(1),
         metrics=metrics,
-        n_fetched=None,  # filled by the driver from the counters row
-        n_children=None,
+        # every persisted frame of the round gets unpersisted by the driver
+        # once the outputs are materialized — nothing may pin session
+        # memory across rounds (the seen-set grows; pinned copies starved
+        # execution memory in long pytest sessions)
+        cached=[allowed, fetched, resolved, eligible, new_firsts]
+        + _probe_caches + _rank_caches + _login_caches + _gate_caches,
     )
-    # every persisted frame of the round gets unpersisted by the driver
-    # once the outputs are materialized — nothing may pin session memory
-    # across rounds (the seen-set grows; pinned copies starved execution
-    # memory in long pytest sessions)
-    result._cached = [allowed, fetched, resolved, eligible, new_firsts] \
-        + _probe_caches + _rank_caches + _login_caches + _gate_caches
-    return result
