@@ -62,6 +62,9 @@ def make_spark(cores: int):
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "48g")
         .config("spark.sql.files.maxPartitionBytes", "64m")
+        # a crawl round cycles through more generated classes than the
+        # default 100-entry codegen cache holds (README, deployment)
+        .config("spark.sql.codegen.cache.maxEntries", "4000")
         .getOrCreate()
     )
 

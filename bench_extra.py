@@ -7,7 +7,6 @@ per change without running the whole driver protocol:
   python bench_extra.py narrow  [N] [CORES]    # hash-narrow secondary
   python bench_extra.py micro q1 q2 ...        # noop-timed queries at sf0.1
   python bench_extra.py micro_sf SFDIR q1 ...  # same at another scale factor
-  python bench_extra.py e2e [SCALE] [ROUNDS]   # crawl engine steady state
 
 Sessions use the same config as bench.py's make_spark. Every number is
 printed as one JSON line per stage.
@@ -74,50 +73,6 @@ def main():
                 "median": sorted(atts)[1],
                 "loadavg": round(os.getloadavg()[0], 1),
             }))
-        spark.stop()
-    elif mode == "e2e":
-        import dataclasses
-
-        import pandas as pd
-
-        from ideacrawler_spark.config import JobSpec
-        from ideacrawler_spark.plans.crawl import CrawlEngine
-        from ideacrawler_spark.sources.fixtures import (
-            PAGES_SCHEMA, ROBOTS_SCHEMA, synth_web,
-        )
-
-        scale = int(sys.argv[2]) if len(sys.argv) > 2 else 200
-        rounds = int(sys.argv[3]) if len(sys.argv) > 3 else 8
-        spark = make_spark(32)
-        spark.sparkContext.setLogLevel("ERROR")
-        pages, robots, seeds, _ = synth_web(seed=42, scale=scale)
-        spec = JobSpec(job_id="bx-e2e", seed_url=seeds[0]["url"],
-                       impolite=True, follow_other_domains=True,
-                       min_delay_s=1, round_seconds=3600,
-                       max_concurrent=1 << 30, max_rounds=rounds)
-        pages_df = spark.createDataFrame(pd.DataFrame(pages), PAGES_SCHEMA) \
-            .repartition(16).persist()
-        pages_df.count()
-        robots_df = spark.createDataFrame(robots, ROBOTS_SCHEMA)
-        CrawlEngine(spark, dataclasses.replace(spec, max_rounds=2,
-                                               job_id="bx-e2e-warm"),
-                    pages_df, robots_df, shuffle_partitions=16).run()
-        atts = []
-        for _ in range(2):
-            spark.catalog.clearCache()
-            pages_df.persist()
-            pages_df.count()
-            eng = CrawlEngine(spark, spec, pages_df, robots_df,
-                              shuffle_partitions=16)
-            t0 = time.monotonic()
-            out = eng.run()
-            dt = time.monotonic() - t0
-            n_fetched = sum(m.get("fetched", 0) for m in out["metrics"])
-            atts.append(dict(seconds=round(dt, 3), fetched=n_fetched,
-                             rounds=out["rounds"],
-                             spr=round(dt / max(out["rounds"], 1), 2)))
-        print(json.dumps({"stage": "e2e", "scale": scale, "attempts": atts,
-                          "loadavg": round(os.getloadavg()[0], 1)}))
         spark.stop()
 
 

@@ -22,8 +22,10 @@ from __future__ import annotations
 
 from typing import Tuple
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ideacrawler_spark.operators.sqltext import Views
 
 # Order key packing: depth is bounded (< 2^23), per-round seq < 2^40.
 _SEQ_BITS = 40
@@ -81,29 +83,42 @@ def admit_budget(frontier: DataFrame, host_budget_col, global_budget=None,
     fr = frontier.withColumn(
         "_salt", F.pmod(F.xxhash64(F.col("url")), F.lit(salt))
     ).withColumn("_hb", host_budget_col)
-
-    def cap(rn_col):
-        cond = rn_col <= F.col("_hb")
-        if host_budget_max is not None:
-            cond = (rn_col <= F.lit(int(host_budget_max))) & cond
-        return cond
-
-    w1 = Window.partitionBy("host", "_salt").orderBy("depth", "seq")
-    p1 = fr.withColumn("_rn1", F.row_number().over(w1))
-    survivors = p1.filter(cap(F.col("_rn1"))).drop("_rn1")
-    carried1 = p1.filter(~cap(F.col("_rn1"))).drop(
-        "_rn1", "_salt", "_hb")
-    w2 = Window.partitionBy("host").orderBy("depth", "seq")
-    p2 = survivors.withColumn("_rn2", F.row_number().over(w2))
-    host_admitted = p2.filter(cap(F.col("_rn2"))).drop(
-        "_rn2", "_salt", "_hb")
-    carried2 = p2.filter(~cap(F.col("_rn2"))).drop(
-        "_rn2", "_salt", "_hb")
-    carried = carried1.unionByName(carried2)
+    with Views(fr.sparkSession) as v:
+        admitted, carried = (v.sql(q) for q in budget_sql(
+            v.add(fr, "admission_in"), host_budget_max))
     if global_budget is None:
-        return host_admitted, carried  # no global cap → skip the topk scan
-    admitted, overflow = admit_topk(host_admitted, global_budget)
+        return admitted, carried  # no global cap → skip the topk scan
+    admitted, overflow = admit_topk(admitted, global_budget)
     return admitted, carried.unionByName(overflow)
+
+
+def salted_sql(src: str, host_budget: str, salt: int = 16) -> str:
+    """The relation ``src`` plus :func:`admit_budget`'s ``_salt`` and
+    ``_hb`` columns, ``host_budget`` being SQL text over ``src``."""
+    return (f"(SELECT *, pmod(xxhash64(url), {int(salt)}) AS _salt, "
+            f"{host_budget} AS _hb FROM {src})")
+
+
+def budget_sql(fr: str, host_budget_max: int | None = None) -> Tuple[str, str]:
+    """:func:`admit_budget`'s per-host windows over the relation ``fr``
+    (:func:`salted_sql`): the admitted and the carried rows' SQL text, in
+    ``fr``'s column order."""
+    def cap(rn):
+        if host_budget_max is None:
+            return f"{rn} <= _hb"
+        return f"{rn} <= {int(host_budget_max)} AND {rn} <= _hb"
+
+    p1 = (f"(SELECT *, row_number() OVER (PARTITION BY host, _salt "
+          f"ORDER BY depth, seq) AS _rn1 FROM {fr})")
+    p2 = (f"(SELECT *, row_number() OVER (PARTITION BY host "
+          f"ORDER BY depth, seq) AS _rn2 FROM "
+          f"(SELECT * EXCEPT (_rn1) FROM {p1} WHERE {cap('_rn1')}))")
+    admitted = f"SELECT * EXCEPT (_rn2, _salt, _hb) FROM {p2} WHERE {cap('_rn2')}"
+    carried = (
+        f"SELECT * EXCEPT (_rn1, _salt, _hb) FROM {p1} WHERE NOT ({cap('_rn1')}) "
+        f"UNION ALL SELECT * EXCEPT (_rn2, _salt, _hb) FROM {p2} "
+        f"WHERE NOT ({cap('_rn2')})")
+    return admitted, carried
 
 
 def admit_topk(df: DataFrame, k: int) -> Tuple[DataFrame, DataFrame]:
@@ -114,28 +129,32 @@ def admit_topk(df: DataFrame, k: int) -> Tuple[DataFrame, DataFrame]:
     buckets strictly below it, and window-rank ONLY the boundary bucket.
     Returns (admitted, rest)."""
     df = df.withColumn("_okey", order_key(F.col("depth"), F.col("seq")))
-    df = df.withColumn("_bkt", (F.col("_okey") / F.lit(1 << _BUCKET_BITS)).cast("long"))
-    hist = (
-        df.groupBy("_bkt").count().orderBy("_bkt").collect()
-    )
-    total = sum(r["count"] for r in hist)
-    if total <= k:
-        return df.drop("_okey", "_bkt"), df.limit(0).drop("_okey", "_bkt")
-    cum = 0
-    boundary, below = None, 0
-    for r in hist:
-        if cum + r["count"] > k:
-            boundary, below = r["_bkt"], cum
-            break
-        cum += r["count"]
-    admitted_lo = df.filter(F.col("_bkt") < boundary)
-    boundary_rows = df.filter(F.col("_bkt") == boundary)
-    w = Window.partitionBy("_bkt").orderBy("_okey")
-    ranked = boundary_rows.withColumn("_rn", F.row_number().over(w))
-    admitted_b = ranked.filter(F.col("_rn") <= k - below).drop("_rn")
-    rest_b = ranked.filter(F.col("_rn") > k - below).drop("_rn")
-    rest = df.filter(F.col("_bkt") > boundary).unionByName(rest_b)
-    return (
-        admitted_lo.unionByName(admitted_b).drop("_okey", "_bkt"),
-        rest.drop("_okey", "_bkt"),
-    )
+    with Views(df.sparkSession) as v:
+        keyed = v.add(v.sql(
+            f"SELECT *, CAST(_okey / {1 << _BUCKET_BITS} AS BIGINT) AS _bkt "
+            f"FROM {v.add(df, 'topk_in')}"), "topk_keyed")
+        hist = v.sql(f"SELECT _bkt, count(*) AS count FROM {keyed} "
+                     "GROUP BY _bkt ORDER BY _bkt").collect()
+        rows = f"SELECT * EXCEPT (_okey, _bkt) FROM {keyed}"
+        total = sum(r["count"] for r in hist)
+        if total <= k:
+            return v.sql(rows), v.sql(f"{rows} LIMIT 0")
+        cum = 0
+        boundary, below = None, 0
+        for r in hist:
+            if cum + r["count"] > k:
+                boundary, below = r["_bkt"], cum
+                break
+            cum += r["count"]
+        ranked = (f"(SELECT *, row_number() OVER (PARTITION BY _bkt "
+                  f"ORDER BY _okey) AS _rn FROM {keyed} "
+                  f"WHERE _bkt = {int(boundary)})")
+        cut = int(k - below)
+        return (
+            v.sql(f"{rows} WHERE _bkt < {int(boundary)} UNION ALL "
+                  f"SELECT * EXCEPT (_okey, _bkt, _rn) FROM {ranked} "
+                  f"WHERE _rn <= {cut}"),
+            v.sql(f"{rows} WHERE _bkt > {int(boundary)} UNION ALL "
+                  f"SELECT * EXCEPT (_okey, _bkt, _rn) FROM {ranked} "
+                  f"WHERE _rn > {cut}"),
+        )

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ideacrawler_spark.operators.sqltext import Views, ident, quote
+
 
 def first_occurrence(candidates: DataFrame, key: str = "url_norm",
                      order_cols=("parent_depth", "parent_seq", "link_pos")
@@ -33,14 +35,28 @@ def first_occurrence(candidates: DataFrame, key: str = "url_norm",
     partial aggregation acts as a map-side combiner — duplicate links are
     collapsed BEFORE the shuffle, which is the whole point at 10^10 links.
     The key is uniformly distributed (canonical URL), so no skew."""
-    others = [c for c in candidates.columns if c != key]
-    order = F.struct(*[F.col(c) for c in order_cols])
-    row = F.min_by(F.struct(*[F.col(c) for c in others]), order)
-    return (
-        candidates.groupBy(key)
-        .agg(row.alias("_row"))
-        .select(F.col(key), *[F.col(f"_row.{c}").alias(c) for c in others])
-    )
+    with Views(candidates.sparkSession) as v:
+        return v.sql(first_occurrence_sql(
+            v.add(candidates, "candidates"), candidates.columns, key,
+            order_cols))
+
+
+def first_occurrence_sql(src: str, columns, key: str = "url_norm",
+                         order_cols=("parent_depth", "parent_seq", "link_pos")
+                         ) -> str:
+    """:func:`first_occurrence` over the relation ``src`` (a view name or
+    a parenthesized query) with columns ``columns``."""
+    others = [c for c in columns if c != key]
+    k = ident(key)
+    return (f"SELECT {k}, "
+            + ", ".join(f"_row.{ident(c)} AS {ident(c)}" for c in others)
+            + f" FROM (SELECT {k}, min_by({_struct(others)}, "
+            f"{_struct(order_cols)}) AS _row FROM {src} GROUP BY {k})")
+
+
+def _struct(cols) -> str:
+    return "named_struct(" + ", ".join(
+        f"{quote(c)}, {ident(c)}" for c in cols) + ")"
 
 
 def seen_row_bytes(key: str) -> int:
@@ -53,6 +69,11 @@ def seen_row_bytes(key: str) -> int:
 def seen_row_bytes_col(key):
     """:func:`seen_row_bytes` as a Column over the string Column ``key``."""
     return F.lit(16) + F.lit(8) * F.ceil(F.octet_length(key) / F.lit(8))
+
+
+def seen_row_bytes_sql(key: str) -> str:
+    """:func:`seen_row_bytes_col` as SQL text over the column ``key``."""
+    return f"16 + 8 * ceil(octet_length({key}) / 8)"
 
 
 def anti_join_seen(candidates: DataFrame, seen: DataFrame,
@@ -82,19 +103,25 @@ def anti_join_seen(candidates: DataFrame, seen: DataFrame,
     shards (operators/bloom.py, :func:`prefiltered_anti_join`), so the
     exact join only sees the maybe-seen remainder, and an in-memory crawl
     takes the default sort-merge path, which spills."""
+    with Views(candidates.sparkSession) as v:
+        return v.sql(anti_join_seen_sql(
+            v.add(candidates, "candidates"), v.add(seen, "seen"), key,
+            seen_key, partitioned))
+
+
+def anti_join_seen_sql(src: str, seen: str, key: str = "url_norm",
+                       seen_key: str = "key",
+                       partitioned: bool = False) -> str:
+    """:func:`anti_join_seen` of the relation ``src`` against the relation
+    ``seen``."""
+    k, sk = ident(key), ident(seen_key)
     if partitioned:
-        s = seen.select(F.col(seen_key).alias(key)).hint("SHUFFLE_HASH")
-        return candidates.join(s, on=[key], how="left_anti")
-    s = seen.select(
-        F.xxhash64(F.col(seen_key)).alias("__seen_hash"),
-        F.col(seen_key).alias("__seen_key"),
-    )
-    return candidates.join(
-        s,
-        on=(F.xxhash64(F.col(key)) == F.col("__seen_hash"))
-        & (F.col(key) == F.col("__seen_key")),
-        how="left_anti",
-    )
+        return (f"SELECT /*+ SHUFFLE_HASH(s) */ * FROM {src} c LEFT ANTI JOIN "
+                f"(SELECT {sk} AS {k} FROM {seen}) s USING ({k})")
+    return (f"SELECT c.* FROM {src} c LEFT ANTI JOIN "
+            f"(SELECT xxhash64({sk}) AS __seen_hash, {sk} AS __seen_key "
+            f"FROM {seen}) s ON xxhash64(c.{k}) = s.__seen_hash "
+            f"AND c.{k} = s.__seen_key")
 
 
 def prefiltered_anti_join(flagged: DataFrame, seen: DataFrame,
@@ -108,7 +135,9 @@ def prefiltered_anti_join(flagged: DataFrame, seen: DataFrame,
 
     Both branches read ``flagged``: persist it, or each re-runs the
     Python probe over every candidate."""
-    fresh = flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen", "url_hash")
-    to_check = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen", "url_hash")
-    return fresh.unionByName(
-        anti_join_seen(to_check, seen, key=key, seen_key=seen_key))
+    with Views(flagged.sparkSession) as v:
+        flagged, seen = v.add(flagged, "flagged"), v.add(seen, "seen")
+        # both branches keep flagged's column order: a union by name
+        rows = f"SELECT * EXCEPT (_maybe_seen, url_hash) FROM {flagged} WHERE"
+        return v.sql(f"{rows} NOT _maybe_seen UNION ALL " + anti_join_seen_sql(
+            f"({rows} _maybe_seen)", seen, key, seen_key))

@@ -38,8 +38,9 @@ ids.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from ideacrawler_spark.operators.sqltext import Views, ident
 
 
 SMALL_RANK_ROWS = 131072  # single-task sort is cheaper below this
@@ -66,7 +67,7 @@ def global_rank(df: DataFrame, order_cols, out_col: str = "rank",
     round's admission budget); an exact count of the input (e.g. the
     crawl round's counters row for the rows it enqueues) is a proven
     bound too. When it proves the input fits in one task
-    (≤ SMALL_RANK_ROWS), rank via a single-exchange window instead —
+    (:func:`one_task_rank`), rank via a single-exchange window instead —
     ``repartitionByRange`` costs a range-SAMPLING job plus a shuffle,
     pure overhead for small-bounded rounds, and the single partition does
     not strangle downstream parallelism because the next operator is a
@@ -74,56 +75,61 @@ def global_rank(df: DataFrame, order_cols, out_col: str = "rank",
     the 10^10-URL target the budget bound exceeds the threshold and the
     scalable path runs unchanged; this is an adaptive switch on a proven
     bound, never a guess from sampled stats."""
-    cols = [F.col(c) for c in order_cols]
-    if small_hint is not None and small_hint <= SMALL_RANK_ROWS:
-        w = Window.orderBy(*cols)
-        return df.withColumn(
-            out_col,
-            (F.row_number().over(w) - 1 + F.lit(offset)).cast("long"))
-    # persist_input: the range partitioner's boundary-sampling job executes
-    # the child once and the shuffle executes it again — for a caller whose
-    # upstream is UDF-heavy AND un-cached (the bench frontier pipeline)
-    # that doubles the whole pipeline, so such callers opt in. For cheap or
-    # already-cached upstreams (a parquet projection, a round's persisted
-    # mid-frames) the extra materialization costs more than the re-run.
-    if persist_input:
-        src = df.persist()
+    with Views(df.sparkSession) as v:
+        if one_task_rank(small_hint):
+            return v.sql(window_rank_sql(v.add(df, "rank_in"), order_cols,
+                                         out_col, offset))
+        # persist_input: the range partitioner's boundary-sampling job
+        # executes the child once and the shuffle executes it again — for
+        # a caller whose upstream is UDF-heavy AND un-cached (the bench
+        # frontier pipeline) that doubles the whole pipeline, so such
+        # callers opt in. For cheap or already-cached upstreams (a parquet
+        # projection, a round's persisted mid-frames) the extra
+        # materialization costs more than the re-run.
+        if persist_input:
+            df = df.persist()
+            if track is not None:
+                track.append(df)
+        cols = ", ".join(ident(c) for c in order_cols)
+        n = f"{int(num_partitions)}, " if num_partitions else ""
+        # number rows inside each range partition WITHOUT a window: the id
+        # is (pid << 33) | row_index in the SORT BY order, so the split
+        # below is exact and no Exchange(_pid)+Sort is ever planned.
+        # Persisted: the offsets subquery and the caller's action would
+        # otherwise both recompute the range shuffle.
+        ranked = v.sql(
+            "SELECT * EXCEPT (_mid), "
+            "CAST(shiftrightunsigned(_mid, 33) AS INT) AS _pid, "
+            f"CAST(_mid % {1 << 33} + 1 AS INT) AS _rn "
+            "FROM (SELECT *, monotonically_increasing_id() AS _mid FROM "
+            f"(SELECT /*+ REPARTITION_BY_RANGE({n}{cols}) */ * "
+            f"FROM {v.add(df, 'rank_in')} SORT BY {cols}))")
+        # named before it is persisted, so by its lineage: the join below
+        # reads it twice, and Spark 4.1 cannot canonicalize a cached
+        # relation joined with itself when its plan is sorted
+        # (InMemoryRelation.newInstance keeps the old output ordering)
+        r = v.add(ranked, "ranked")
+        ranked.persist()
         if track is not None:
-            track.append(src)
-    else:
-        src = df
-    if num_partitions:
-        part = src.repartitionByRange(num_partitions, *cols)
-    else:
-        part = src.repartitionByRange(*cols)
-    # number rows inside each range partition WITHOUT a window: the id is
-    # (pid << 33) | row_index in the sortWithinPartitions order, so the
-    # split below is exact and no Exchange(_pid)+Sort is ever planned
-    part = (
-        part.sortWithinPartitions(*cols)
-        .withColumn("_mid", F.monotonically_increasing_id())
-        .select(
-            "*",
-            F.shiftrightunsigned(F.col("_mid"), 33).cast("int").alias("_pid"),
-            (F.col("_mid") % F.lit(1 << 33) + 1).cast("int").alias("_rn"),
-        )
-        .drop("_mid")
-    )
-    # persist: the offsets subquery and the caller's action would otherwise
-    # both recompute the range shuffle
-    ranked = part.persist()
-    if track is not None:
-        track.append(ranked)
-    counts = ranked.groupBy("_pid").agg(F.count("*").alias("_n"))
-    # single-partition window over ≤num_partitions COUNT rows (not data)
-    wo = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "_pid",
-        (F.coalesce(F.sum("_n").over(wo), F.lit(0)) + F.lit(offset))
-        .alias("_off"),
-    )
-    return (
-        ranked.join(F.broadcast(offsets), "_pid")
-        .withColumn(out_col, F.col("_off") + F.col("_rn") - 1)
-        .drop("_pid", "_rn", "_off")
-    )
+            track.append(ranked)
+        # single-partition window over ≤num_partitions COUNT rows (not data)
+        return v.sql(
+            f"SELECT /*+ BROADCAST(o) */ r.* EXCEPT (_pid, _rn), "
+            f"o._off + r._rn - 1 AS {ident(out_col)} FROM {r} r JOIN "
+            "(SELECT _pid, coalesce(sum(_n) OVER (ORDER BY _pid ROWS BETWEEN "
+            f"UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + {int(offset)} AS _off "
+            f"FROM (SELECT _pid, count(*) AS _n FROM {r} GROUP BY _pid)) o "
+            "USING (_pid)")
+
+
+def one_task_rank(small_hint: int | None) -> bool:
+    """Whether a proven row bound lets :func:`global_rank` take the
+    single-task window."""
+    return small_hint is not None and small_hint <= SMALL_RANK_ROWS
+
+
+def window_rank_sql(src: str, order_cols, out_col: str, offset: int) -> str:
+    """:func:`global_rank`'s single-task window over the relation ``src``."""
+    cols = ", ".join(ident(c) for c in order_cols)
+    return (f"SELECT *, CAST(row_number() OVER (ORDER BY {cols}) - 1 "
+            f"+ {int(offset)} AS BIGINT) AS {ident(out_col)} FROM {src}")

@@ -24,7 +24,7 @@ from functools import partial
 from typing import List, Optional
 from urllib.parse import urlsplit
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -32,6 +32,7 @@ from ideacrawler_spark.config import DelaySampler, JobSpec
 from ideacrawler_spark.functions.urlnorm import canonicalize
 from ideacrawler_spark.operators import bloom
 from ideacrawler_spark.operators.dedup import seen_row_bytes
+from ideacrawler_spark.operators.sqltext import Views, quote
 from ideacrawler_spark.plans.catalog import ParquetManifestCatalog
 from ideacrawler_spark.plans.round import FRONTIER_SCHEMA, run_round
 
@@ -62,6 +63,68 @@ def _local_frame(spark: SparkSession, rows: List[dict],
 
     table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
     return spark.createDataFrame(table, schema)
+
+
+RULE_FIELDS = ("rule_seq", "rule_path", "allow", "fetch_status")
+
+
+def robots_groups(robots: DataFrame, useragent: Optional[str]):
+    """robots rows → (one row per host with the UA-selected rule group,
+    its schema).
+
+    Group selection = FindGroup (robotstxt.go:160-181): '*' is the
+    starting candidate with prefix length 1; a named group must be a
+    STRICTLY longer prefix of the client UA to displace it — so a 1-char
+    named UA loses to '*'. DomainOpt.Useragent (job.go:669 →
+    FindGroup(f.UserAgent), fetch.go:473); goclient default "Fetchbot",
+    lowercased: FindGroup compares case-insensitively.
+
+    Only the candidate groups' rows reach the driver, through one narrow
+    job (a filter, no shuffle); the selection runs there. A group's rules
+    are sorted as Spark's ``array_sort`` sorts their structs (field by
+    field, a null field first), i.e. by rule_seq, so the UDF sees FILE
+    ORDER (findRule's strict-'>' means the first rule in file order wins
+    ties); its crawl delay is the largest non-null one."""
+    ua = (useragent or "Fetchbot").lower()
+    if "rule_seq" not in robots.columns:
+        robots = robots.withColumn("rule_seq", F.lit(0))
+    fields = {f.name: f for f in robots.schema.fields}
+    schema = T.StructType([
+        fields["host"],
+        T.StructField("crawl_delay", fields["crawl_delay"].dataType),
+        T.StructField("rules", T.ArrayType(
+            T.StructType([fields[n] for n in RULE_FIELDS]), False), False),
+    ])
+    star = "lower(user_agent) = '*'"
+    with Views(robots.sparkSession) as v:
+        rows = v.sql(
+            f"SELECT host, user_agent, crawl_delay, {', '.join(RULE_FIELDS)}, "
+            f"{star} AS _star, length(user_agent) AS _len "
+            f"FROM {v.add(robots, 'robots')} WHERE {star} OR "
+            f"(length(user_agent) >= 1 AND startswith({quote(ua)}, "
+            "lower(user_agent)))").collect()
+    groups: dict = {}
+    for r in rows:
+        groups.setdefault((r["host"], r["user_agent"]), []).append(r)
+    best: dict = {}
+    for (host, agent), rs in groups.items():
+        # ties at rank 1 go to '*' (Go needs strictly greater to displace)
+        star_group = bool(rs[0]["_star"])
+        key = (-(1 if star_group else rs[0]["_len"]), -star_group, agent)
+        if host not in best or key < best[host][0]:
+            best[host] = (key, rs)
+    out = []
+    for host, (_, rs) in best.items():
+        delays = [r["crawl_delay"] for r in rs if r["crawl_delay"] is not None]
+        out.append(dict(
+            host=host,
+            crawl_delay=max(delays, key=lambda d: (d != d, d), default=None),
+            rules=sorted(
+                ({n: r[n] for n in RULE_FIELDS} for r in rs),
+                key=lambda rule: [(rule[n] is not None, rule[n])
+                                  for n in RULE_FIELDS]),
+        ))
+    return out, schema
 
 
 class CrawlEngine:
@@ -95,15 +158,14 @@ class CrawlEngine:
         self.spec = spec
         self.pages = pages
         # the robots dim never changes, and every action of every round
-        # broadcasts it: it is collected ONCE into a driver-local frame
-        # (broadcast-small, so it fits on the driver anyway) and no action
-        # rebuilds it from the caller's robots rows
+        # broadcasts it: it is built ONCE on the driver into a driver-local
+        # frame (broadcast-small, so it fits on the driver anyway) and no
+        # action rebuilds it from the caller's robots rows
         robots_rows = []
         self.robots_host = None
         if robots is not None:
-            dim = self._prep_robots(robots)
-            robots_rows = [r.asDict(recursive=True) for r in dim.collect()]
-            self.robots_host = _local_frame(spark, robots_rows, dim.schema)
+            robots_rows, schema = robots_groups(robots, spec.useragent)
+            self.robots_host = _local_frame(spark, robots_rows, schema)
         # literal upper bound on any host's budget (max over the robots
         # dim's crawl delays + the no-robots default) — computed ONCE from
         # the collected dim; lets admission use WindowGroupLimit partial
@@ -152,54 +214,6 @@ class CrawlEngine:
         self._outlinks: List[DataFrame] = []
 
     # ------------------------------------------------------------------
-    def _prep_robots(self, robots: DataFrame) -> DataFrame:
-        """robots rows → one row per host with the UA-selected rule group.
-
-        Group selection = FindGroup (robotstxt.go:160-181): '*' is the
-        starting candidate with prefix length 1; a named group must be a
-        STRICTLY longer prefix of the client UA to displace it — so a
-        1-char named UA loses to '*'. Computed relationally; stays fully
-        JVM-side. Rules are collected sorted by rule_seq so the UDF sees
-        FILE ORDER (findRule's strict-'>' means the first rule in file
-        order wins ties)."""
-        # DomainOpt.Useragent (job.go:669 → FindGroup(f.UserAgent),
-        # fetch.go:473); goclient default "Fetchbot". Lowercased: FindGroup
-        # compares case-insensitively.
-        ua = (self.spec.useragent or "Fetchbot").lower()
-        if "rule_seq" not in robots.columns:
-            robots = robots.withColumn("rule_seq", F.lit(0))
-        g = robots.groupBy("host", "user_agent").agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("rule_seq"), F.col("rule_path"),
-                        F.col("allow"), F.col("fetch_status"),
-                    )
-                )
-            ).alias("rules"),
-            F.max("crawl_delay").alias("crawl_delay"),
-        )
-        is_star = F.lower(F.col("user_agent")) == "*"
-        rank = (
-            F.when(is_star, F.lit(1))
-            .when(
-                F.lit(ua).startswith(F.lower(F.col("user_agent"))),
-                F.length("user_agent"),
-            )
-            .otherwise(F.lit(-1))
-        )
-        g = g.withColumn("_ua_rank", rank).filter(F.col("_ua_rank") >= 1)
-        # ties at rank 1 go to '*' (Go needs strictly greater to displace)
-        w = F.row_number().over(
-            Window.partitionBy("host").orderBy(
-                F.desc("_ua_rank"), F.desc(is_star.cast("int")), F.col("user_agent")
-            )
-        )
-        return (
-            g.withColumn("_rn", w).filter(F.col("_rn") == 1)
-            .select("host", "crawl_delay", "rules")
-        )
-
     def _max_host_budget(self, robots_rows: List[dict]) -> int:
         budgets = [self.spec.host_budget(0.0)]
         if not self.spec.impolite:
@@ -513,17 +527,18 @@ class CrawlEngine:
             # fold this round's new keys into the Bloom shards; the new
             # shard directory becomes part of the round's atomic commit
             bloom.update_shards(
-                res.seen_new.select(F.xxhash64("key").alias("key_hash")),
+                res.seen_new.selectExpr("xxhash64(key) AS key_hash"),
                 self.bloom_dir, bloom_next, n_shards=self.bloom_shards,
                 n_keys=cnt["n_new"])
 
+        def write(table):
+            # the output's statement is analyzed here, in its own thread
+            return self._materialize(getattr(res, table), table, rnd)
+
         # seen checkpoint is the DELTA only (this round's new keys):
         # per-round checkpoint IO is O(|new|), not O(|seen|)
-        outputs = dict(shipped=res.shipped, order=m.pop("order"),
-                       part_metrics=m.pop("part_metrics"),
-                       outlinks=res.outlinks)
-        actions = {t: partial(self._materialize, df, t, rnd)
-                   for t, df in outputs.items()}
+        actions = {t: partial(write, t)
+                   for t in ("shipped", "order", "part_metrics", "outlinks")}
         waiting = dict(
             frontier_next=rank_frontier,
             seen_delta=lambda cnt: self._materialize(
@@ -534,8 +549,7 @@ class CrawlEngine:
         try:
             done = self._run_actions(rnd, res.counters, actions, waiting)
         finally:
-            for df in res._cached:
-                df.unpersist()
+            res.release()
         cnt = done["counters"]
         if self.ckpt:
             self.bloom_dir = bloom_next

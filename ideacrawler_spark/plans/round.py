@@ -13,13 +13,17 @@ single DataFrame pipeline:
 
 Every relational step is a built-in (whole-stage-codegen'd) operator;
 Python appears only in Arrow-batched UDFs (extract, resolve, robots,
-xpath). Filters are plain DataFrame predicates so Catalyst pushes them
-into the parquet scans.
+xpath). The relational steps are SQL text over temp views of the round's
+inputs and persisted frames (operators/sqltext.py): a statement is one
+py4j call and one analysis, where the same steps as DataFrame and Column
+calls cost hundreds of calls. DataFrame calls remain where the round
+persists a frame or applies a pandas UDF. Catalyst plans both forms
+alike, and still pushes the filters into the parquet scans.
 """
 
 from __future__ import annotations
 
-from functools import reduce
+from functools import lru_cache
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,150 +33,56 @@ from ideacrawler_spark.config import JobSpec
 from ideacrawler_spark.functions.extract import extract_links_udf
 from ideacrawler_spark.functions.robots import robots_allowed_udf
 from ideacrawler_spark.functions.urlnorm import host_raw, resolve_canon_udf
-from ideacrawler_spark.operators.admission import admit_budget
+from ideacrawler_spark.operators.admission import (
+    admit_topk, budget_sql, salted_sql)
 from ideacrawler_spark.operators.dedup import (
-    anti_join_seen, first_occurrence, prefiltered_anti_join,
-    seen_row_bytes_col)
-from ideacrawler_spark.operators.rank import global_rank
-
-# pandas UDFs are plan-level objects: constructing one costs py4j round
-# trips, so build each once per (python-side) process and reuse across
-# rounds — the crawl loop builds this plan every round
-from functools import lru_cache
+    anti_join_seen, first_occurrence_sql, prefiltered_anti_join,
+    seen_row_bytes_sql)
+from ideacrawler_spark.operators.rank import (
+    global_rank, one_task_rank, window_rank_sql)
+from ideacrawler_spark.operators.sqltext import Views, double, quote
 
 
 @lru_cache(maxsize=8)
-def _udfs(unsafe: bool, feeds: bool = False):
+def _udf_cols(unsafe: bool, feeds: bool):
+    """The round's pandas-UDF applications as Column trees, built once per
+    (python-side) process: constructing a UDF and its Columns costs py4j
+    round trips, and the trees are immutable, so every round reuses them."""
     from ideacrawler_spark.functions.extract import extract_links_feeds_udf
 
+    if feeds:
+        links = extract_links_feeds_udf()(F.col("_html"), F.col("_is_feed"))
+    else:
+        links = extract_links_udf()(F.col("_html"))
     return dict(
-        robots=robots_allowed_udf(),
-        extract=extract_links_feeds_udf() if feeds else extract_links_udf(),
-        resolve=resolve_canon_udf(unsafe=unsafe),
+        # Go tests agent.Test(v.URL().Path) — the raw (possibly EMPTY) path;
+        # %-decoding happens inside the UDF (u.Path is the decoded form)
+        robots=robots_allowed_udf()(
+            F.expr("coalesce(parse_url(url_norm, 'PATH'), '')"),
+            F.col("rules")),
+        links=[F.col("parent_depth"), F.col("parent_seq"),
+               F.col("parent_url"), F.col("meta"),
+               F.posexplode(links).alias("link_pos", "_link")],
+        resolve=resolve_canon_udf(unsafe=unsafe)(
+            F.col("parent_url"), F.col("_link.href")),
     )
 
 
-@lru_cache(maxsize=8)
-def _static_exprs(mimetype: str, child_method: str, shuffle_partitions: int):
-    """Round-invariant Column expression trees, built ONCE per process.
+def _counts(src: str, **aggs: str) -> str:
+    """Named single-row aggregates of ``src`` as ONE ``map<string, bigint>``
+    column ``counts``.
 
-    Profiled: run_round spent ~1.6 s/round blocked on py4j building the
-    same unresolved expressions every round (each F.col/alias/when is a
-    JVM round trip and every DataFrame op re-analyzes). Column objects
-    are immutable unresolved trees, so they are safely reused across
-    rounds and DataFrames — the same lifetime story as the cached UDFs
-    above. Only the genuinely per-round pieces (F.lit(rnd), offsets) are
-    still built inside run_round."""
-    ship_base = [
-        F.col("fetch_seq"), F.col("url"), F.col("depth"),
-        F.col("anchor").alias("anchor_text"), F.col("meta"),
-    ]
-    return dict(
-        path_col=F.coalesce(
-            F.parse_url(F.col("url_norm"), F.lit("PATH")), F.lit("")),
-        ctype_base=F.coalesce(
-            F.trim(F.split(F.col("_ctype"), ";").getItem(0)),
-            F.lit(mimetype),
-        ),
-        status_filled=F.coalesce(F.col("_status"), F.lit(404)),
-        is_err=(F.col("_status") >= 400) & (F.col("_status") < 600),
-        head_requeues=[
-            F.lit(0).alias("depth"),
-            F.col("depth").alias("parent_depth"),
-            F.col("seq").alias("parent_seq"),
-            F.lit(-1).alias("link_pos"),
-            F.col("url"), F.col("url_norm"), F.col("host"),
-            F.lit("").alias("anchor"), F.col("meta"),
-            F.lit("GET").alias("method"),
-            F.lit(False).alias("pushed"), F.lit(False).alias("no_callback"),
-        ],
-        children=[
-            (F.col("parent_depth") + 1).alias("depth"),
-            F.col("parent_depth"), F.col("parent_seq"), F.col("link_pos"),
-            F.col("url_norm").alias("url"), F.col("url_norm"), F.col("host"),
-            F.col("anchor"), F.col("meta"),
-            F.lit(child_method).alias("method"),
-            F.lit(False).alias("pushed"), F.lit(False).alias("no_callback"),
-        ],
-        shipped_err=ship_base + [
-            F.col("_status").alias("status"), F.lit("").alias("text"),
-            F.lit(False).alias("success"),
-        ],
-        shipped_ok=ship_base + [
-            F.col("_status").alias("status"),
-            F.coalesce(F.col("_text"), F.lit("")).alias("text"),
-            F.lit(True).alias("success"),
-        ],
-        links_post=[
-            F.col("parent_depth"), F.col("parent_seq"), F.col("parent_url"),
-            F.col("meta"), F.col("link_pos"),
-            F.col("_link.href").alias("href"),
-            F.col("_link.anchor").alias("anchor"),
-        ],
-        resolved_post=[
-            F.col("parent_depth"), F.col("parent_seq"), F.col("parent_url"),
-            F.col("meta"), F.col("link_pos"), F.col("anchor"),
-            F.col("_res.url_norm").alias("url_norm"),
-            F.col("_res.host_raw").alias("host_raw"),
-            F.col("_res.host").alias("host"),
-        ],
-        adm_counts=_counter_map(
-            admitted=F.count("*"),
-            robots_denied=F.sum(F.when(~F.col("_allowed"), 1).otherwise(0)),
-        ),
-        fetch_counts=_counter_map(
-            fetched=F.count("*"),
-            errors=F.sum(
-                F.when(
-                    (F.col("_ctype_base") == mimetype)
-                    & (F.col("method") == "GET") & ~F.col("no_callback")
-                    & (F.col("_status") >= 400) & (F.col("_status") < 600),
-                    1,
-                ).otherwise(0)
-            ),
-        ),
-        elig_counts=_counter_map(n_eligible=F.count("*")),
-        enq_counts=_counter_map(n_enq=F.count("*")),
-        shard=F.pmod(F.xxhash64(F.col("host")),
-                     F.lit(shuffle_partitions)).cast("int").alias("shard"),
-        pm_aggs=[
-            F.count("*").alias("admitted"),
-            F.sum(F.when(~F.col("_allowed"), 1).otherwise(0))
-            .alias("robots_denied"),
-            F.sum(F.when(F.col("_allowed"), 1).otherwise(0)).alias("fetched"),
-        ],
-        outlink_aggs=[
-            F.array_sort(F.collect_set("url_norm")).alias("outlinks"),
-            F.first("parent_depth").alias("depth"),
-        ],
-        pg_cols=[
-            F.col("url").alias("_page_url"),
-            F.col("html").alias("_html"),
-            F.col("text").alias("_text"),
-            F.col("status").alias("_status"),
-            F.col("content_type").alias("_ctype"),
-        ],
-        seen_key=F.col("url_norm").alias("key"),
-        new_counts=_counter_map(
-            n_new=F.count("*"),
-            new_bytes=F.sum(seen_row_bytes_col(F.col("url_norm"))),
-        ),
-        logged_out_counts=_counter_map(n_logged_out=F.count("*")),
-        block_counts=_counter_map(
-            n_url_blocked=F.sum(F.when(F.col("_url_blocked"), 1).otherwise(0))),
-    )
+    Counts and sums of ints are all bigint, so every counters row of a
+    round has the same schema and they union into one job, where a
+    ``crossJoin`` chain of single-row frames plans one broadcast job per
+    join. A map keeps every name, a null value included (a sum over zero
+    rows)."""
+    pairs = ", ".join(f"{quote(k)}, {agg}" for k, agg in aggs.items())
+    return f"SELECT map({pairs}) AS counts FROM {src}"
 
 
-def _counter_map(**aggs):
-    """Named single-row aggregates as ONE ``map<string, bigint>`` column.
-
-    Counts and sums of ints are all bigint, so every counters frame of a
-    round has the same schema and they union into one job, where a ``crossJoin`` chain of single-row frames
-    plans one broadcast job per join. A map keeps every name, a null
-    value included (a sum over zero rows)."""
-    return F.create_map(*(
-        x for name, agg in aggs.items() for x in (F.lit(name), agg))
-    ).alias("counts")
+def _n_true(cond: str) -> str:
+    return f"sum(CASE WHEN {cond} THEN 1 ELSE 0 END)"
 
 
 FRONTIER_SCHEMA = (
@@ -189,26 +99,38 @@ SEEN_SCHEMA = "key string"
 
 
 class RoundResult:
-    """One round's outputs, as lazy frames. The counters row sizes the
-    round's tail: ``frontier_next`` and ``seen_delta`` are built from its
-    exact counts, so the driver builds them after collecting it."""
+    """One round's outputs. ``run_round`` builds and persists the frames
+    the outputs share; each output's statement is analyzed when it is
+    first read, in the thread of the action that reads it, so the
+    driver's serial plan build holds only the shared frames. The counters
+    row sizes the round's tail: ``frontier_next`` and ``seen_delta`` are
+    built from its exact counts, after it is collected. ``release()``
+    frees the round's persisted frames and temp views once its outputs
+    are materialized."""
 
-    def __init__(self, spark, shipped, carried, enq, seq_offset,
-                 shuffle_partitions, seen_new, outlinks, counters, metrics,
+    def __init__(self, views, sql, seq_offset, shuffle_partitions, metrics,
                  cached):
-        self.shipped = shipped
-        self.seen_new = seen_new            # NEW seen keys discovered this round
-        self.outlinks = outlinks
         self.metrics = metrics              # dict of lineage counters
-        self._spark = spark
-        self._carried = carried             # frontier rows not admitted
-        self._enq = enq                     # children + HEAD requeues, unranked
+        self._views = views                 # the views ``sql`` reads
+        self._sql = sql                     # output name -> statement
+        self._frames = {}
         self._seq_offset = seq_offset
         self._nparts = shuffle_partitions
-        self._counters = counters
         # every persisted frame of the round, released by the driver once
         # the outputs are materialized (including those the tail persists)
         self._cached = cached
+
+    def _frame(self, name: str) -> DataFrame:
+        if name not in self._frames:
+            self._frames[name] = self._views.sql(self._sql[name])
+        return self._frames[name]
+
+    shipped = property(lambda self: self._frame("shipped"))
+    order = property(lambda self: self._frame("order"))
+    part_metrics = property(lambda self: self._frame("part_metrics"))
+    outlinks = property(lambda self: self._frame("outlinks"))
+    # the NEW seen keys discovered this round
+    seen_new = property(lambda self: self._frame("seen_new"))
 
     def counters(self) -> dict:
         """Collect ALL round counters in one job, as name -> int.
@@ -216,7 +138,7 @@ class RoundResult:
         SQL sums over zero rows are null; they read as 0 here. The login
         and URL-gating counters exist only when their feature is on."""
         out = dict(n_logged_out=0, n_url_blocked=0)
-        for row in self._counters.collect():
+        for row in self._frame("counters").collect():
             out.update(row["counts"])
         return {k: int(v or 0) for k, v in out.items()}
 
@@ -230,45 +152,47 @@ class RoundResult:
         ``n_enq``, the counters row's exact count of them, is the rank's
         row bound; ``n_front`` = carried + ``n_enq`` is the output's."""
         enq = global_rank(
-            self._enq, ["parent_depth", "parent_seq", "link_pos"],
+            self._frame("enq"), ["parent_depth", "parent_seq", "link_pos"],
             out_col="seq", offset=self._seq_offset,
             num_partitions=self._nparts, track=self._cached,
             small_hint=n_enq,
-        ).drop("parent_depth", "parent_seq", "link_pos")
-        out = self._carried.unionByName(enq).select(*FRONTIER_COLUMNS)
-        return _one_task_if_one_batch(self._spark, out, n_front)
+        )
+        # each branch selects the columns by name: carried and the ranked
+        # rows hold them in different orders
+        cols = ", ".join(FRONTIER_COLUMNS)
+        return self._views.sql(
+            f"SELECT {_one_task_hint(self._views.spark, n_front)}* FROM "
+            f"(SELECT {cols} FROM ({self._sql['carried']}) "
+            f"UNION ALL SELECT {cols} FROM {self._views.add(enq, 'enq')})")
 
     def seen_delta(self, n_new: int) -> DataFrame:
         """The new seen keys, bounded by the counters row's ``n_new``."""
-        return _one_task_if_one_batch(self._spark, self.seen_new, n_new)
+        if _one_task_hint(self._views.spark, n_new):
+            return self.seen_new.coalesce(1)
+        return self.seen_new
+
+    def release(self):
+        for df in self._cached:
+            df.unpersist()
+        self._views.drop()
 
 
-def _host_budget_col(spec: JobSpec):
-    """JobSpec.host_budget as a Column over the joined crawl_delay."""
-    return _host_budget_col_cached(
-        bool(spec.impolite), float(spec.effective_delay_s),
-        float(spec.round_seconds), max(1, spec.threads_per_site))
-
-
-@lru_cache(maxsize=8)
-def _host_budget_col_cached(impolite: bool, eff: float,
-                            round_seconds: float, threads: int):
-    if impolite:
-        delay = F.lit(eff)
+def _host_budget_sql(spec: JobSpec) -> str:
+    """JobSpec.host_budget as SQL text over the joined crawl_delay."""
+    eff = double(spec.effective_delay_s)
+    if spec.impolite:
+        delay = eff
     else:
-        delay = F.when(
-            F.col("crawl_delay").isNotNull() & (F.col("crawl_delay") > 0),
-            F.col("crawl_delay"),
-        ).otherwise(F.lit(eff))
-    per_thread = F.greatest(F.lit(1), F.floor(F.lit(round_seconds) / delay))
-    return per_thread * F.lit(threads)
+        delay = (f"CASE WHEN crawl_delay IS NOT NULL AND crawl_delay > 0 "
+                 f"THEN crawl_delay ELSE {eff} END")
+    return (f"greatest(1, floor({double(spec.round_seconds)} / {delay})) "
+            f"* {max(1, spec.threads_per_site)}")
 
 
-def _one_task_if_one_batch(spark: SparkSession, df: DataFrame,
-                           row_bound: Optional[int]) -> DataFrame:
-    """Coalesce ``df`` to ONE task when at most ``row_bound`` rows, which
-    fit in one Arrow batch, reach it: ahead of a pandas UDF, and for a
-    small output written as one file.
+def _one_task_hint(spark: SparkSession, row_bound: Optional[int]) -> str:
+    """A hint coalescing a statement's output to ONE task when at most
+    ``row_bound`` rows, which fit in one Arrow batch, reach it: ahead of a
+    pandas UDF, and for a small output written as one file; else ``""``.
 
     Every Python task pays a fixed worker set-up cost whatever its row
     count. With PySpark 4.1 on Python 3.11, about 100-130 ms of each
@@ -281,8 +205,8 @@ def _one_task_if_one_batch(spark: SparkSession, df: DataFrame,
     batch size of zero or less (no limit), keeps its partitioning."""
     batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
     if row_bound is not None and 0 < batch and row_bound <= batch:
-        return df.coalesce(1)
-    return df
+        return "/*+ COALESCE(1) */ "
+    return ""
 
 
 def _hash_build_fits(spark: SparkSession, build_bytes: int) -> bool:
@@ -293,6 +217,15 @@ def _hash_build_fits(spark: SparkSession, build_bytes: int) -> bool:
     conf = spark._jsparkSession.sessionState().conf()
     return build_bytes < conf.autoBroadcastJoinThreshold() \
         * conf.numShufflePartitions()
+
+
+# the resolved links' columns, the eligible links' too
+RESOLVED_COLUMNS = (
+    "parent_depth", "parent_seq", "parent_url", "meta", "link_pos",
+    "_link.anchor AS anchor", "_res.url_norm AS url_norm",
+    "_res.host_raw AS host_raw", "_res.host AS host")
+RULES_TYPE = ("array<struct<rule_seq:int,rule_path:string,allow:boolean,"
+              "fetch_status:int>>")
 
 
 def run_round(
@@ -313,6 +246,7 @@ def run_round(
     host_budget_max: Optional[int] = None,
     seen_bytes: Optional[int] = None,
 ) -> RoundResult:
+    v = Views(spark)  # dropped by RoundResult.release()
     metrics = dict(round=rnd)
     if global_budget is None:
         global_budget = spec.global_budget()
@@ -322,44 +256,38 @@ def run_round(
     effective_gb = global_budget
     if n_pending is not None and n_pending <= global_budget:
         effective_gb = None
+    X = _udf_cols(spec.unsafe_normalize, spec.follow_feeds)
 
     # ---- politeness: join per-host robots dim, compute budgets, admit ----
+    fr = v.add(frontier, "frontier")
     if robots_host is not None:
-        fr = frontier.join(F.broadcast(robots_host), on="host", how="left")
+        fr = (f"(SELECT /*+ BROADCAST(r) */ * FROM {fr} "
+              f"LEFT JOIN {v.add(robots_host, 'robots')} r USING (host))")
     else:
-        fr = frontier.withColumn("crawl_delay", F.lit(None).cast("double")) \
-                     .withColumn("rules", F.lit(None).cast(
-                         "array<struct<rule_seq:int,rule_path:string,"
-                         "allow:boolean,fetch_status:int>>"))
-    admitted, carried = admit_budget(
-        fr, _host_budget_col(spec), effective_gb,
-        host_budget_max=host_budget_max,
-    )
-    carried = carried.drop("crawl_delay", "rules")
+        fr = (f"(SELECT *, CAST(NULL AS DOUBLE) AS crawl_delay, "
+              f"CAST(NULL AS {RULES_TYPE}) AS rules FROM {fr})")
+    admitted, carried = budget_sql(salted_sql(fr, _host_budget_sql(spec)),
+                                   host_budget_max)
+    admitted = v.sql(admitted)
+    if effective_gb is not None:
+        admitted, overflow = admit_topk(admitted, effective_gb)
+        # the same columns in the same order: a union by name
+        carried += f" UNION ALL SELECT * FROM {v.add(overflow, 'overflow')}"
+    sql = dict(carried=f"SELECT * EXCEPT (crawl_delay, rules) FROM ({carried})")
     metrics["carried"] = None  # filled by driver (avoids an extra action)
 
-    child_method = "HEAD" if spec.check_content else "GET"
-    X = _static_exprs(spec.mimetype, child_method, shuffle_partitions)
-
     # ---- robots allow/deny gate (pandas UDF over the joined rule array) --
-    # Go tests agent.Test(v.URL().Path) — the raw (possibly EMPTY) path;
-    # %-decoding happens inside the UDF (u.Path is the decoded form).
     # A round coalesces by its PENDING count, not the admitted one:
     # coalescing is narrow, so the same task also runs the admission
     # window over every pending row.
     if spec.impolite:
         allowed = admitted.withColumn("_allowed", F.lit(True))
     else:
-        allowed = _one_task_if_one_batch(spark, admitted, n_pending).withColumn(
-            "_allowed",
-            _udfs(spec.unsafe_normalize)["robots"](X["path_col"],
-                                                   F.col("rules")),
-        )
+        if _one_task_hint(spark, n_pending):
+            admitted = admitted.coalesce(1)
+        allowed = admitted.withColumn("_allowed", X["robots"])
     allowed = allowed.persist()
-    # admission counters fold into the single end-of-round counters job
-    adm_counts = allowed.agg(X["adm_counts"])
-    fetchable = allowed.filter(F.col("_allowed")).drop(
-        "_allowed", "crawl_delay", "rules")
+    al = v.add(allowed, "allowed")
 
     # ---- deterministic fetch order (the crawl-order golden) --------------
     # proven row bound: admitted ≤ min(pending, global budget) — lets
@@ -369,25 +297,27 @@ def run_round(
         admit_bound = n_pending if global_budget is None \
             else min(n_pending, global_budget)
     _rank_caches: list = []
-    fetchable = global_rank(
-        fetchable, ["depth", "seq"], out_col="fetch_seq",
-        offset=fetch_seq_offset,
-        num_partitions=shuffle_partitions,
-        track=_rank_caches,
-        small_hint=admit_bound,
-    )
+    fetchable = (f"SELECT * EXCEPT (_allowed, crawl_delay, rules) FROM {al} "
+                 f"WHERE _allowed")
+    if one_task_rank(admit_bound):
+        ranked = "(" + window_rank_sql(f"({fetchable})", ["depth", "seq"],
+                                       "fetch_seq", fetch_seq_offset) + ")"
+    else:
+        ranked = v.add(global_rank(
+            v.sql(fetchable), ["depth", "seq"], out_col="fetch_seq",
+            offset=fetch_seq_offset, num_partitions=shuffle_partitions,
+            track=_rank_caches, small_hint=admit_bound), "ranked")
 
     # ---- "fetch" = equi-join against the simulated web -------------------
-    pg = pages.select(*X["pg_cols"])
-    fetched = fetchable.join(pg, on=fetchable.url_norm == pg._page_url, how="left")
-    fetched = (
-        fetched.withColumn("_status", X["status_filled"])
-        # misses behave like text/html 404s (ctype coalesced to mimetype)
-        .withColumn("_ctype_base", X["ctype_base"])
-        .drop("_page_url", "_ctype")
-        .persist()
-    )
-    fetch_counts = fetched.agg(X["fetch_counts"])
+    # misses behave like text/html 404s (ctype coalesced to mimetype)
+    mt = quote(spec.mimetype)
+    fetched = v.sql(
+        f"SELECT r.*, p.html AS _html, p.text AS _text, "
+        f"coalesce(p.status, 404) AS _status, "
+        f"coalesce(trim(split(p.content_type, ';')[0]), {mt}) AS _ctype_base "
+        f"FROM {ranked} r LEFT JOIN {v.add(pages, 'pages')} p "
+        f"ON r.url_norm = p.url").persist()
+    fe = v.add(fetched, "fetched")
 
     # mimetype mux (job.go:620-623): non-matching pages are not handled at
     # all — except, with follow_feeds, feed-typed pages, which are handled
@@ -396,33 +326,30 @@ def run_round(
     if spec.follow_feeds:
         from ideacrawler_spark.sources.feeds import FEED_MIMETYPES
 
-        _feed_ct = F.col("_ctype_base").isin(list(FEED_MIMETYPES))
-        handled = fetched.filter(
-            (F.col("_ctype_base") == spec.mimetype) | _feed_ct
-        ).withColumn(
-            "_is_feed", _feed_ct & (F.col("_ctype_base") != spec.mimetype)
-        )
+        feed = f"_ctype_base IN ({', '.join(map(quote, FEED_MIMETYPES))})"
+        handled = (f"(SELECT *, {feed} AND _ctype_base != {mt} AS _is_feed "
+                   f"FROM {fe} WHERE _ctype_base = {mt} OR {feed})")
     else:
-        handled = fetched.filter(
-            F.col("_ctype_base") == spec.mimetype
-        ).withColumn("_is_feed", F.lit(False))
+        handled = (f"(SELECT *, false AS _is_feed FROM {fe} "
+                   f"WHERE _ctype_base = {mt})")
 
     # ---- HEAD requeue quirk (job.go:302-315): GET, depth reset, anchor lost
     head_requeues = (
-        handled.filter(F.col("method") == "HEAD")
-        .select(*X["head_requeues"])
-    )
+        "SELECT 0 AS depth, depth AS parent_depth, seq AS parent_seq, "
+        "-1 AS link_pos, url, url_norm, host, '' AS anchor, meta, "
+        "'GET' AS method, false AS pushed, false AS no_callback "
+        f"FROM {handled} WHERE method = 'HEAD'")
 
-    gets = handled.filter((F.col("method") == "GET") & ~F.col("no_callback"))
-    is_err = X["is_err"]
+    gets = f"(SELECT * FROM {handled} WHERE method = 'GET' AND NOT no_callback)"
+    is_err = "_status >= 400 AND _status < 600"
 
     # ---- error gate (job.go:121-137): ship error only at depth 0 ---------
-    rnd_col = F.lit(rnd).alias("round")
-    err_rows = gets.filter(is_err & ~F.col("_is_feed"))
-    shipped_err = err_rows.filter(F.col("depth") == 0).select(
-        *X["shipped_err"], rnd_col)
+    shipped_err = (
+        "SELECT fetch_seq, url, depth, anchor AS anchor_text, meta, "
+        f"_status AS status, '' AS text, false AS success, {rnd} AS round "
+        f"FROM {gets} WHERE {is_err} AND NOT _is_feed AND depth = 0")
 
-    ok = gets.filter(~is_err)
+    ok = f"(SELECT * FROM {gets} WHERE NOT ({is_err}))"
 
     # ---- login-session guard (F11 HTTP half, job.go:157-185) -------------
     # After each OK page: first-node value of the check xpath must equal
@@ -437,70 +364,55 @@ def run_round(
         from ideacrawler_spark.functions.extract import xpath_value_udf
 
         lkey, lval = spec.login_success_check
-        ok = ok.withColumn(
+        checked = v.sql(f"SELECT * FROM {ok}").withColumn(
             "_logged_in",
             F.col("_is_feed")  # feed pages skip the xpath session check
             | (F.lower(xpath_value_udf(lkey)(F.col("_html")))
                == F.lit(str(lval).lower())),
         ).persist()
-        _login_caches.append(ok)
-        logged_out = ok.filter(~F.col("_logged_in"))
-        shipped_err = shipped_err.unionByName(
-            logged_out.select(
-                F.col("fetch_seq"), F.lit("").alias("url"), F.col("depth"),
-                F.lit("").alias("anchor_text"), F.lit("").alias("meta"),
-                F.lit(1502).alias("status"), F.lit("").alias("text"),
-                F.lit(False).alias("success"), F.lit(rnd).alias("round"),
-            )
-        )
-        ok = ok.filter(F.col("_logged_in"))
+        _login_caches.append(checked)
+        ck = v.add(checked, "checked")
+        logged_out = f"(SELECT * FROM {ck} WHERE NOT _logged_in)"
+        shipped_err += (
+            " UNION ALL SELECT fetch_seq, '' AS url, depth, '' AS anchor_text,"
+            " '' AS meta, 1502 AS status, '' AS text, false AS success, "
+            f"{rnd} AS round FROM {logged_out}")
+        ok = f"(SELECT * FROM {ck} WHERE _logged_in)"
 
     # ---- follow gate on the CURRENT page URL (job.go:188) ----------------
-    follow = ok.filter(F.lit(not spec.no_follow))
+    gate = ["false" if spec.no_follow else "true"]
     if spec.follow_url_regexp:
-        follow = follow.filter(F.col("url").rlike(spec.follow_url_regexp))
+        gate.append(f"url RLIKE {quote(spec.follow_url_regexp)}")
     if spec.depth >= 0:
-        follow = follow.filter(F.col("depth") < spec.depth)
+        gate.append(f"depth < {int(spec.depth)}")
+    follow = v.sql(
+        "SELECT depth AS parent_depth, seq AS parent_seq, url AS parent_url, "
+        f"meta, _html, _is_feed FROM {ok} WHERE {' AND '.join(gate)}")
 
     # ---- link extraction + resolution (the two Arrow UDFs) ---------------
-    if spec.follow_feeds:
-        _extract_col = _udfs(spec.unsafe_normalize, True)["extract"](
-            F.col("_html"), F.col("_is_feed"))
-    else:
-        _extract_col = _udfs(spec.unsafe_normalize)["extract"](
-            F.col("_html"))
-    links = follow.select(
-        F.col("depth").alias("parent_depth"),
-        F.col("seq").alias("parent_seq"),
-        F.col("url").alias("parent_url"),
-        F.col("meta"),
-        F.posexplode(_extract_col).alias("link_pos", "_link"),
-    ).select(*X["links_post"])
-    resolved = links.withColumn(
-        "_res",
-        _udfs(spec.unsafe_normalize)["resolve"](
-            F.col("parent_url"), F.col("href")
-        ),
-    ).select(*X["resolved_post"]) \
-        .filter(F.col("url_norm").isNotNull()).persist()
+    resolved = (
+        follow.select(*X["links"]).withColumn("_res", X["resolve"])
+        .selectExpr(*RESOLVED_COLUMNS)
+        .filter("url_norm IS NOT NULL").persist())
+    rs = v.add(resolved, "resolved")
 
     # ---- analyzed-URLs sink (job.go:815,874-893): per-page outlink set;
     #      one row per fetched page, so at most admit_bound rows
-    outlinks = _one_task_if_one_batch(
-        spark, resolved.groupBy("parent_url").agg(*X["outlink_aggs"]),
-        admit_bound)
+    sql["outlinks"] = (
+        f"SELECT {_one_task_hint(spark, admit_bound)}parent_url, "
+        "array_sort(collect_set(url_norm)) AS outlinks, "
+        f"first(parent_depth) AS depth FROM {rs} GROUP BY parent_url")
 
     # ---- eligibility (job.go:792-806) ------------------------------------
-    req_match = F.lit(True)
+    req_match = ["true"]
     if spec.callback_url_regexp:
-        req_match = req_match & F.col("url_norm").rlike(spec.callback_url_regexp)
+        req_match.append(f"url_norm RLIKE {quote(spec.callback_url_regexp)}")
     if spec.callback_anchor_regexp:
-        req_match = req_match & F.col("anchor").rlike(spec.callback_anchor_regexp)
-    follow_match = (
-        F.col("url_norm").rlike(spec.follow_url_regexp)
-        if spec.follow_url_regexp else F.lit(True)
-    )
-    eligible_all = resolved.filter(req_match | follow_match)
+        req_match.append(f"anchor RLIKE {quote(spec.callback_anchor_regexp)}")
+    follow_match = (f"url_norm RLIKE {quote(spec.follow_url_regexp)}"
+                    if spec.follow_url_regexp else "true")
+    eligible_all = (f"SELECT * FROM {rs} "
+                    f"WHERE ({' AND '.join(req_match)}) OR {follow_match}")
 
     # ---- frontier URL gating (engine extension, not in the reference):
     #      suffix-blocklisted hosts and spam-signal URLs are dropped HERE,
@@ -508,22 +420,23 @@ def run_round(
     #      seen-set space, checkpoint IO, or politeness budget, and the
     #      drop count rides the round's single counters action.
     _gate_caches: list = []
+    counters = []
     if spec.url_gating:
         from ideacrawler_spark.operators.urlfilter import (
             apply_url_gating, drop_gating_cols,
         )
 
         gated = apply_url_gating(
-            eligible_all, spec, url_col="url_norm", host_col="host",
+            v.sql(eligible_all), spec, url_col="url_norm", host_col="host",
         ).persist()
         _gate_caches.append(gated)
-        block_counts = gated.agg(X["block_counts"])
+        gt = v.add(gated, "gated")
+        counters.append(_counts(gt, n_url_blocked=_n_true("_url_blocked")))
         eligible = drop_gating_cols(
-            gated.filter(~F.col("_url_blocked"))).persist()
+            v.sql(f"SELECT * FROM {gt} WHERE NOT _url_blocked")).persist()
     else:
-        block_counts = None
-        eligible = eligible_all.persist()
-    elig_counts = eligible.agg(X["elig_counts"])
+        eligible = v.sql(eligible_all).persist()
+    el = v.add(eligible, "eligible")
 
     # ---- dedup: in-round first occurrence, then anti-join the seen table.
     #      ``seen_bytes`` (the seen-set's hash-build size, None if unknown)
@@ -532,7 +445,8 @@ def run_round(
     #      Above it, or unknown, a Bloom checkpoint lets provably-new rows
     #      skip the join (D1); without one, a known-large seen-set takes
     #      the sort-merge join, which spills.
-    firsts = first_occurrence(eligible)
+    firsts = first_occurrence_sql(
+        el, [c.split()[-1] for c in RESOLVED_COLUMNS])
     fits = seen_bytes is not None and _hash_build_fits(spark, seen_bytes)
     _probe_caches: list = []
     if bloom_dir is not None and not fits:
@@ -541,8 +455,8 @@ def run_round(
         # persisted: both branches of the prefiltered anti-join read ONE
         # evaluation of the Python probe
         flagged = bloom.maybe_seen(
-            firsts.withColumn("url_hash", F.xxhash64("url_norm")), bloom_dir,
-            n_shards=bloom_shards).persist()
+            v.sql(f"SELECT *, xxhash64(url_norm) AS url_hash FROM ({firsts})"),
+            bloom_dir, n_shards=bloom_shards).persist()
         _probe_caches.append(flagged)
         new_firsts = prefiltered_anti_join(flagged, seen).persist()
     else:
@@ -550,8 +464,9 @@ def run_round(
         # partitioned anti-join reuses that exchange and hash-probes the
         # seen side unsorted
         new_firsts = anti_join_seen(
-            firsts, seen, partitioned=fits or seen_bytes is None).persist()
-    new_counts = new_firsts.agg(X["new_counts"])
+            v.sql(firsts), seen, partitioned=fits or seen_bytes is None
+        ).persist()
+    nf = v.add(new_firsts, "new_firsts")
 
     # ---- cross-domain quirk (job.go:842-845): mark seen, don't enqueue.
     #      The CHILD host is lowercase (purell mutated u.Host before
@@ -559,76 +474,88 @@ def run_round(
     #      seed URL's raw case (j.domainname, worker.go:100-112) — so a
     #      mixed-case seed URL matches nothing and the job enqueues no
     #      children, exactly like the reference.
+    #      Cross-domain rows are NOT enqueued but DO enter the seen-set:
+    #      seen_new below is ALL of new_firsts, children only the same-host.
+    same_host = ""
     if spec.seed_url and not spec.follow_other_domains:
-        # cross-domain rows are NOT enqueued but DO enter the seen-set:
-        # seen_new below is ALL of new_firsts, children only the same-host
-        seed_raw = host_raw(spec.seed_url)
-        children_src = new_firsts.filter(F.col("host") == F.lit(seed_raw))
-    else:
-        children_src = new_firsts
-
-    children = children_src.select(*X["children"])
+        same_host = f" WHERE host = {quote(host_raw(spec.seed_url))}"
+    child_method = "HEAD" if spec.check_content else "GET"
 
     # ---- the rows this round enqueues: children + HEAD requeues. They
     #      are counted here and ranked into frontier_next by the driver
     #      once their exact count is known (RoundResult.frontier_next).
-    enq = children.unionByName(head_requeues)
+    enq = (
+        "SELECT parent_depth + 1 AS depth, parent_depth, parent_seq, "
+        "link_pos, url_norm AS url, url_norm, host, anchor, meta, "
+        f"{quote(child_method)} AS method, false AS pushed, "
+        f"false AS no_callback FROM {nf}{same_host} "
+        f"UNION ALL {head_requeues}")
 
-    seen_new = new_firsts.select(X["seen_key"])
+    sql["seen_new"] = f"SELECT url_norm AS key FROM {nf}"
 
     # ---- callback OR-chain (job.go:210-273) -------------------------------
-    cb = F.lit(False)
+    cb = ["false"]
     if spec.callback_seed_url:
-        cb = cb | (F.col("depth") == 0)
-    if not spec.callback_url_regexp and not spec.callback_xpath_match \
-            and not spec.callback_xpath_regexp:
-        cb = F.lit(True)  # no callback specs at all ⇒ ship everything
+        cb.append("depth = 0")
+    xpath_pairs = [p for p in (spec.callback_xpath_match,
+                               spec.callback_xpath_regexp) if p]
+    if not spec.callback_url_regexp and not xpath_pairs:
+        cb = ["true"]  # no callback specs at all ⇒ ship everything
     if spec.callback_url_regexp:
-        cb = cb | F.col("url").rlike(spec.callback_url_regexp)
+        cb.append(f"url RLIKE {quote(spec.callback_url_regexp)}")
     if spec.callback_anchor_regexp:
-        cb = cb | F.col("anchor").rlike(spec.callback_anchor_regexp)
-    if spec.callback_xpath_match or spec.callback_xpath_regexp:
+        cb.append(f"anchor RLIKE {quote(spec.callback_anchor_regexp)}")
+    if xpath_pairs:
         from ideacrawler_spark.functions.extract import xpath_match_udf
-        # equality for BOTH variants (job.go:233-269 quirk)
-        for pairs in (spec.callback_xpath_match, spec.callback_xpath_regexp):
-            if pairs:
-                cb = cb | xpath_match_udf(pairs)(F.col("_html"))
-    shipped_ok = ok.filter(cb & ~F.col("_is_feed")).select(
-        *X["shipped_ok"], rnd_col)
-    shipped = shipped_err.unionByName(shipped_ok)
 
-    order_cols = fetched.select(
-        "fetch_seq", "url", "host", "depth").withColumn("round", F.lit(rnd))
+        # equality for BOTH variants (job.go:233-269 quirk)
+        cb_col = F.expr(" OR ".join(cb))
+        for pairs in xpath_pairs:
+            cb_col = cb_col | xpath_match_udf(pairs)(F.col("_html"))
+        ok = v.add(v.sql(f"SELECT * FROM {ok}").filter(cb_col), "callback")
+        cb = ["true"]
+    sql["shipped"] = (
+        f"{shipped_err} UNION ALL SELECT fetch_seq, url, depth, "
+        "anchor AS anchor_text, meta, _status AS status, "
+        f"coalesce(_text, '') AS text, true AS success, {rnd} AS round "
+        f"FROM {ok} WHERE ({' OR '.join(cb)}) AND NOT _is_feed")
+
+    sql["order"] = (
+        f"SELECT fetch_seq, url, host, depth, {rnd} AS round FROM {fe}")
 
     # ---- per-partition lineage metrics (D3): one row per host-hash shard.
     #      The reference only logs ad hoc (job.go:207,865); the engine keeps
-    #      auditable counts per shard per round.
-    #      At most shuffle_partitions rows, one per shard.
-    part_metrics = _one_task_if_one_batch(spark, (
-        allowed.groupBy(X["shard"])
-        .agg(*X["pm_aggs"])
-        .withColumn("round", F.lit(rnd))
-        .withColumn("retried", F.lit(0))  # reference never retries
-        # (fetch.go:415-425: errors and robots-denials drop, no requeue)
-    ), shuffle_partitions)
+    #      auditable counts per shard per round. The reference never
+    #      retries (fetch.go:415-425: errors and robots-denials drop, no
+    #      requeue). At most shuffle_partitions rows, one per shard.
+    shard = f"CAST(pmod(xxhash64(host), {int(shuffle_partitions)}) AS INT)"
+    sql["part_metrics"] = (
+        f"SELECT {_one_task_hint(spark, shuffle_partitions)}{shard} AS shard, "
+        f"count(*) AS admitted, {_n_true('NOT _allowed')} AS robots_denied, "
+        f"{_n_true('_allowed')} AS fetched, {rnd} AS round, 0 AS retried "
+        f"FROM {al} GROUP BY {shard}")
     metrics["retried"] = 0
-    metrics["part_metrics"] = part_metrics  # DataFrame; driver materializes
 
-    metrics["order"] = order_cols  # DataFrame; driver materializes
     # ---- ALL round counters in ONE job: the single-row aggregates union
     #      into one frame, collected once (VERDICT r01: four separate
     #      collects were the round-latency floor)
-    counters = [adm_counts, fetch_counts, elig_counts, new_counts,
-                enq.agg(X["enq_counts"])]
-    if login_guard:
-        counters.append(logged_out.agg(X["logged_out_counts"]))
-    if block_counts is not None:
-        counters.append(block_counts)
+    counters = [
+        _counts(al, admitted="count(*)",
+                robots_denied=_n_true("NOT _allowed")),
+        _counts(fe, fetched="count(*)", errors=_n_true(
+            f"_ctype_base = {mt} AND method = 'GET' AND NOT no_callback "
+            f"AND {is_err}")),
+        _counts(el, n_eligible="count(*)"),
+        _counts(nf, n_new="count(*)",
+                new_bytes=f"sum({seen_row_bytes_sql('url_norm')})"),
+        _counts(f"({enq})", n_enq="count(*)"),
+    ] + ([_counts(logged_out, n_logged_out="count(*)")] if login_guard
+         else []) + counters
+    sql["enq"] = enq
+    sql["counters"] = ("SELECT /*+ COALESCE(1) */ * FROM ("
+                       + " UNION ALL ".join(counters) + ")")
     return RoundResult(
-        spark, shipped=shipped, carried=carried, enq=enq,
-        seq_offset=seq_offset, shuffle_partitions=shuffle_partitions,
-        seen_new=seen_new, outlinks=outlinks,
-        counters=reduce(DataFrame.union, counters).coalesce(1),
+        v, sql, seq_offset=seq_offset, shuffle_partitions=shuffle_partitions,
         metrics=metrics,
         # every persisted frame of the round gets unpersisted by the driver
         # once the outputs are materialized — nothing may pin session

@@ -44,6 +44,9 @@ def main():
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "6g")
+        # crawl queries cycle through more generated classes than the
+        # default 100-entry codegen cache holds (README, deployment)
+        .config("spark.sql.codegen.cache.maxEntries", "4000")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -38,7 +38,12 @@ def main():
     from ideacrawler_spark.config import JobSpec
     from ideacrawler_spark.plans.crawl import CrawlEngine
 
-    spark = SparkSession.builder.appName("ideacrawler-spark").getOrCreate()
+    # a round cycles through more generated classes than the default
+    # 100-entry codegen cache holds (README, deployment); a static conf, so
+    # it takes effect only in the session this builds
+    spark = (SparkSession.builder.appName("ideacrawler-spark")
+             .config("spark.sql.codegen.cache.maxEntries", "4000")
+             .getOrCreate())
     nparts = args.shuffle_partitions or spark.sparkContext.defaultParallelism * 2
     spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
 

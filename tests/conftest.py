@@ -20,6 +20,10 @@ def spark():
         # headroom for session-long suites: localCheckpointed round outputs
         # are non-evictable until their engines are garbage-collected
         .config("spark.driver.memory", "6g")
+        # a crawl round cycles through more generated classes than the
+        # default 100-entry codegen cache holds, and recompiles them all
+        # every round (README, deployment)
+        .config("spark.sql.codegen.cache.maxEntries", "4000")
         .getOrCreate()
     )
     yield spark

@@ -1,7 +1,8 @@
 """The crawl round's fixed-cost paths against their general paths.
 
 - seed and push rows built through Arrow equal ``createDataFrame(list)``,
-  and the driver-local robots dim equals the one it was collected from;
+  and the robots dim chosen on the driver equals the relational
+  group selection it replaced, on the fixture and on fuzzed rows;
 - the Bloom-prefiltered anti-join equals the exact anti-join, and
   a round probes each candidate once;
 - the robots UDF runs on one task only when a round's pending rows fit
@@ -10,7 +11,10 @@
   returns the schema a plain parquet read would infer.
 """
 
+import random
+
 from pyspark import SparkContext
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ideacrawler_spark.config import JobSpec
@@ -18,7 +22,8 @@ from ideacrawler_spark.operators import bloom
 from ideacrawler_spark.operators.dedup import (
     anti_join_seen, prefiltered_anti_join)
 from ideacrawler_spark.plans.catalog import ParquetManifestCatalog
-from ideacrawler_spark.plans.crawl import CrawlEngine, _frontier_schema
+from ideacrawler_spark.plans.crawl import (
+    CrawlEngine, _frontier_schema, robots_groups)
 from ideacrawler_spark.plans.round import run_round
 from ideacrawler_spark.refsim import simulate
 
@@ -104,8 +109,9 @@ def test_arrow_frontier_rows_equal_list_rows(spark, web_dfs):
     assert eng.seen.schema == spark.createDataFrame(
         [("http://hosta.example/p/0",)], "key string").schema
     assert [r["key"] for r in eng.seen.collect()] == ["http://hosta.example/p/0"]
-    # the robots dim is collected once, rows and schema unchanged
-    dim = eng._prep_robots(robots_df)
+    # the robots dim is built once, rows and schema as the relational
+    # selection's
+    dim = _robots_dim_reference(robots_df, eng.spec.useragent)
     assert eng.robots_host.schema == dim.schema
     assert sorted(eng.robots_host.collect()) == sorted(dim.collect())
     # read by the JVM alone: no pickled Python RDD under any of the frames
@@ -113,6 +119,67 @@ def test_arrow_frontier_rows_equal_list_rows(spark, web_dfs):
         names = {n.nodeName() for n in _plan_nodes(_executed(df))}
         assert "LocalTableScan" in names
         assert not any("ExistingRDD" in n for n in names)
+
+
+def _robots_dim_reference(robots, useragent):
+    """The relational FindGroup selection the engine ran before it chose
+    the group on the driver (robotstxt.go:160-181): one row per host."""
+    ua = (useragent or "Fetchbot").lower()
+    if "rule_seq" not in robots.columns:
+        robots = robots.withColumn("rule_seq", F.lit(0))
+    g = robots.groupBy("host", "user_agent").agg(
+        F.array_sort(F.collect_list(F.struct(
+            F.col("rule_seq"), F.col("rule_path"), F.col("allow"),
+            F.col("fetch_status")))).alias("rules"),
+        F.max("crawl_delay").alias("crawl_delay"),
+    )
+    is_star = F.lower(F.col("user_agent")) == "*"
+    rank = (F.when(is_star, F.lit(1))
+            .when(F.lit(ua).startswith(F.lower(F.col("user_agent"))),
+                  F.length("user_agent"))
+            .otherwise(F.lit(-1)))
+    g = g.withColumn("_ua_rank", rank).filter(F.col("_ua_rank") >= 1)
+    w = F.row_number().over(Window.partitionBy("host").orderBy(
+        F.desc("_ua_rank"), F.desc(is_star.cast("int")), F.col("user_agent")))
+    return (g.withColumn("_rn", w).filter(F.col("_rn") == 1)
+            .select("host", "crawl_delay", "rules"))
+
+
+def _fuzzed_robots(rng, n_hosts):
+    agents = ["*", "*", "Fetchbot", "fetchbot", "FETCH", "fetchbot/2",
+              "Fetchbo", "F", "f", "", None, "Googlebot", "fetchBOT", "Fe"]
+    paths = ["/", "/a", "/a/", "/b*", "/$", "", None, "/%7Ex"]
+    rows = []
+    for h in range(n_hosts):
+        host = f"h{h}.example" if h else None
+        for agent in rng.sample(agents, rng.randint(1, 5)):
+            for _ in range(rng.randint(1, 4)):
+                rows.append((
+                    host, agent, rng.choice(paths), rng.random() < 0.5,
+                    rng.choice([None, 0.0, 0.5, 2.0, 7.0]),
+                    rng.choice([None, 200, 404, 500]),
+                    rng.choice([0, 1, 1, 2, 3])))  # duplicate rule_seqs
+    return rows
+
+
+def test_robots_group_on_driver_equals_relational(spark):
+    schema = ("host string, user_agent string, rule_path string, "
+              "allow boolean, crawl_delay double, fetch_status int, "
+              "rule_seq int")
+    rng = random.Random(7)
+    cases = [(_fuzzed_robots(rng, 12), ua)
+             for ua in ("Fetchbot", "fetchbot/2.1", "FE", "f", "*", None)]
+    cases.append(([("h.example", "*", "/x", False, 1.0, None, 0),
+                   ("h.example", "F", "/y", True, 2.0, None, 0)], "Fetchbot"))
+    for rows, ua in cases:
+        robots = spark.createDataFrame(rows, schema)
+        for frame in (robots, robots.drop("rule_seq")):
+            want = _robots_dim_reference(frame, ua)
+            got, got_schema = robots_groups(frame, ua)
+            assert got_schema == want.schema, ua
+            # reprs: a null host does not sort among strings
+            assert sorted(map(repr, got)) == sorted(
+                repr(r.asDict(recursive=True)) for r in want.collect()), ua
 
 
 # ---- (b) prefiltered anti-joins ----------------------------------------------
