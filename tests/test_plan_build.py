@@ -2,7 +2,7 @@
 plans it produces.
 
 - a warm ``run_round`` (round 1 of a checkpointed crawl) makes at most
-  300 py4j calls; built from DataFrame and Column calls it made ~1,800;
+  300 py4j calls; built from DataFrame and Column calls it made 1,822;
 - each of the round's eight outputs, and the frontier-skewed prelude at
   10k URLs, plans the same number of exchanges, joins of each strategy,
   windows, sorts, aggregates, Python evaluations and cached-frame scans
