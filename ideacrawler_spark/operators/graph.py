@@ -38,6 +38,8 @@ comfortably past the 10^10-URL design point.
 
 from pyspark.sql import DataFrame, functions as F
 
+from ideacrawler_spark.operators.sqltext import release
+
 
 def host_degrees(edges: DataFrame) -> DataFrame:
     """Exact (node, out_deg, in_deg) over an (src, dst) edge table.
@@ -141,6 +143,7 @@ def _pagerank_loop(edges, n_iter, scale, d_num, d_den, base, seeds):
         (F.lit(init).cast("long") if init is not None
          else F.expr(f"if(_base > 0, {scale}L, 0L)")).alias("pr"),
     )
+    steps = []
     for i in range(n_iter):
         sums = (
             links.join(ranks, links["src"] == ranks["node"])
@@ -166,6 +169,10 @@ def _pagerank_loop(edges, n_iter, scale, d_num, d_den, base, seeds):
             # on a dimension-sized rank vector.
             .localCheckpoint(eager=(i == n_iter - 1))
         )
+        steps.append(ranks)
+    # the final checkpoint no longer reads the intermediate ones
+    for step in steps[:-1]:
+        release(step)
     links.unpersist()
     nodes.unpersist()
     return ranks
@@ -234,15 +241,20 @@ def _hits_loop(edges, n_iter, scale):
             .localCheckpoint(eager=eager)
         )
 
+    halves = []
     for i in range(n_iter):
         last = i == n_iter - 1
         auth = _half(hub, "h", "src", "dst").withColumnRenamed("h", "a")
         hub = _half(auth, "a", "dst", "src",
                     eager=last).withColumnRenamed("a", "h")
+        halves += [auth, hub]
         if last:
             # auth feeds the eagerly-materialized hub, but the output also
             # reads auth directly — pin it before links/nodes unpersist
             auth = auth.localCheckpoint(eager=True)
+    # the output reads the final hub and its own copy of the final auth
+    for half in halves[:-1]:
+        release(half)
     out = (
         nodes.join(auth, "node", "left")
         .join(hub, "node", "left")

@@ -54,10 +54,10 @@ def global_rank(df: DataFrame, order_cols, out_col: str = "rank",
     """Add ``out_col`` = offset + dense 0-based rank of the row in the total
     order given by ``order_cols`` (must be a strict total order).
 
-    ``track``: optional list the internal persisted frame is appended to,
-    so long-running callers (the crawl round loop) can unpersist it once
-    the round's outputs are materialized — otherwise the cache pins
-    memory for the session.
+    ``track``: optional list the internal persisted frames are appended
+    to, for the caller to release once it has read the result (a crawl
+    round passes its ``Views.persisted``); otherwise the cache pins memory
+    for the session.
 
     ``persist_input``: opt-in cache of the input before the range shuffle
     so the boundary-sampling job does not recompute an expensive,

@@ -46,13 +46,28 @@ def ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def release(df: DataFrame):
+    """Free the blocks behind ``df``: its cache, else the RDD of each
+    ``localCheckpoint`` it reads, which ``unpersist()`` leaves pinned."""
+    if df.is_cached:
+        df.unpersist()
+        return
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() == "LogicalRDD":
+            leaf.rdd().unpersist(False)
+
+
 class Views:
     """Temp views over DataFrames for the SQL statements of one plan
-    build; ``drop()`` (or leaving the ``with`` block) removes them."""
+    build, and the frames it persists; ``drop()`` (or leaving the ``with``
+    block) removes and releases them."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self._names: list = []
+        self.persisted: list = []  # released by drop()
 
     def add(self, df: DataFrame, name: str) -> str:
         """Name ``df`` for this scope's statements; returns the view name,
@@ -67,6 +82,12 @@ class Views:
         self._names.append(view)
         return view
 
+    def persist(self, df: DataFrame, name: str) -> str:
+        """Persist ``df`` until ``drop()`` and name it by its cached
+        relation; returns the view name."""
+        self.persisted.append(df.persist())
+        return self.add(df, name)
+
     def sql(self, text: str) -> DataFrame:
         """One analyzed statement (no parameter markers)."""
         return DataFrame(self.spark._jsparkSession.sql(text), self.spark)
@@ -77,6 +98,9 @@ class Views:
             for view in self._names:
                 catalog.dropTempView(view)
             self._names = []
+        for df in self.persisted:
+            release(df)
+        self.persisted.clear()
 
     def __enter__(self) -> "Views":
         return self

@@ -32,7 +32,7 @@ from ideacrawler_spark.config import DelaySampler, JobSpec
 from ideacrawler_spark.functions.urlnorm import canonicalize
 from ideacrawler_spark.operators import bloom
 from ideacrawler_spark.operators.dedup import seen_row_bytes
-from ideacrawler_spark.operators.sqltext import Views, quote
+from ideacrawler_spark.operators.sqltext import Views, quote, release
 from ideacrawler_spark.plans.catalog import ParquetManifestCatalog
 from ideacrawler_spark.plans.round import FRONTIER_SCHEMA, run_round
 
@@ -322,12 +322,17 @@ class CrawlEngine:
         )
         self._frontier_count += len(rows)
 
-    def _has_future_pushes(self, rnd: int) -> bool:
-        # injection consumes entries, so ANY remaining push keeps the
-        # drain loop alive (a mid-round push carries an already-passed
-        # round stamp yet must still be injected at the next boundary)
-        del rnd
-        return bool(self.pushes)
+    def _more(self) -> bool:
+        """Whether another round runs: below max_rounds, not cancelled, and
+        a frontier row or a push pending. Injection consumes pushes, so ANY
+        remaining push keeps the loop alive (a mid-round push carries an
+        already-passed round stamp yet is injected at the next boundary)."""
+        return (self.round < self.spec.max_rounds and not self._cancelled
+                and (self._frontier_count > 0 or bool(self.pushes)))
+
+    def _start(self, resume: bool):
+        if not (resume and self.ckpt and self.resume()):
+            self._init_state()
 
     # ------------------------------------------------------------------
     def _materialize(self, df: DataFrame, table: str, rnd: int) -> DataFrame:
@@ -501,11 +506,11 @@ class CrawlEngine:
         # (VERDICT r02 #4). What they share is computed once; Spark's
         # cache-block locking makes the first job to reach a partition of
         # a persisted frame compute it and the rest wait and reuse it:
-        # - per round (res._cached): the robots-gated admissions
+        # - per round (until res.release()): the robots-gated admissions
         #   (`allowed`, the robots UDF), the fetch join (`fetched`), the
-        #   resolved links (extract + resolve UDFs), the eligible links,
-        #   the Bloom probe (above the hash-build bound), the new keys
-        #   (`new_firsts`, which the fold also reads) and the rank inputs;
+        #   resolved links (extract + resolve UDFs), the filtered eligible
+        #   links, the Bloom probe (above the hash-build bound), the new
+        #   keys (`new_firsts`, which the fold also reads), the rank inputs;
         # - driver-local, so no job computes them: the robots dim (built
         #   once per engine) and the seed and push rows.
         # The rest is recomputed by each action that needs it: the
@@ -536,9 +541,11 @@ class CrawlEngine:
             return self._materialize(getattr(res, table), table, rnd)
 
         # seen checkpoint is the DELTA only (this round's new keys):
-        # per-round checkpoint IO is O(|new|), not O(|seen|)
-        actions = {t: partial(write, t)
-                   for t in ("shipped", "order", "part_metrics", "outlinks")}
+        # per-round checkpoint IO is O(|new|), not O(|seen|). Only a
+        # checkpoint keeps the per-shard metrics: in memory nothing reads them
+        tables = ("shipped", "order", "outlinks") + (
+            ("part_metrics",) if self.ckpt else ())
+        actions = {t: partial(write, t) for t in tables}
         waiting = dict(
             frontier_next=rank_frontier,
             seen_delta=lambda cnt: self._materialize(
@@ -583,15 +590,10 @@ class CrawlEngine:
         m["frontier_next"] = n_front
         self.metrics.append(m)
         self._frontier_count = n_front
-        # the SUPERSEDED frontier localCheckpoint is a non-evictable block
-        # (lineage-truncated): free it or each round pins a copy for the
-        # session's lifetime. (Seen deltas stay pinned — they compose the
-        # live seen-set until the next compaction frees them.)
-        if not self.ckpt:
-            try:
-                self.frontier.unpersist()
-            except Exception:  # noqa: BLE001 — non-persisted frames
-                pass
+        # an in-memory frontier is a non-evictable localCheckpoint: release
+        # the superseded one, or each round pins a copy for the session.
+        # (Seen deltas stay pinned until the next compaction.)
+        release(self.frontier)
         self.frontier = frontier_next
         self._seen_parts.append(seen_delta)
         self.seen = self._union_balanced(list(self._seen_parts))
@@ -603,12 +605,8 @@ class CrawlEngine:
             # it is covered by this round's atomic commit.
             compacted = self._materialize(
                 self.seen.repartition(self.nparts, "key"), "seen_full", rnd)
-            if not self.ckpt:
-                for d in self._seen_parts:
-                    try:
-                        d.unpersist()
-                    except Exception:  # noqa: BLE001
-                        pass
+            for d in self._seen_parts:
+                release(d)
             self._seen_parts = [compacted]
             self.seen = compacted
             compacted_this_round = True
@@ -640,9 +638,7 @@ class CrawlEngine:
     def drain(self):
         """Run rounds until the frontier is empty (all-hosts-idle analogue,
         fetch.go:430-444), cancel() fires, or max_rounds hits."""
-        while self.round < self.spec.max_rounds and not self._cancelled:
-            if self._frontier_count == 0 and not self._has_future_pushes(self.round):
-                break
+        while self._more():
             self.step()
 
     def subscribe(self, resume: bool = False):
@@ -658,13 +654,8 @@ class CrawlEngine:
         ``metrics``. Abandoning the generator stops the crawl exactly
         like the reference's subscriber-disconnect (the next round never
         runs); committed rounds stay resumable."""
-        if resume and self.ckpt and self.resume():
-            pass
-        else:
-            self._init_state()
-        while self.round < self.spec.max_rounds and not self._cancelled:
-            if self._frontier_count == 0 and not self._has_future_pushes(self.round):
-                break
+        self._start(resume)
+        while self._more():
             n_before = len(self._shipped)
             self.step()
             if len(self._shipped) > n_before:
@@ -689,10 +680,7 @@ class CrawlEngine:
 
     def run(self, resume: bool = False) -> dict:
         """Crawl to fixpoint. Returns dict of result DataFrames."""
-        if resume and self.ckpt and self.resume():
-            pass
-        else:
-            self._init_state()
+        self._start(resume)
         self.drain()
         return self.results()
 

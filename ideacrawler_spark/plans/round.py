@@ -105,20 +105,16 @@ class RoundResult:
     driver's serial plan build holds only the shared frames. The counters
     row sizes the round's tail: ``frontier_next`` and ``seen_delta`` are
     built from its exact counts, after it is collected. ``release()``
-    frees the round's persisted frames and temp views once its outputs
-    are materialized."""
+    frees the round's persisted frames (the tail's too) and temp views
+    once its outputs are materialized."""
 
-    def __init__(self, views, sql, seq_offset, shuffle_partitions, metrics,
-                 cached):
+    def __init__(self, views, sql, seq_offset, shuffle_partitions, metrics):
         self.metrics = metrics              # dict of lineage counters
-        self._views = views                 # the views ``sql`` reads
+        self._views = views                 # owns the round's persists
         self._sql = sql                     # output name -> statement
         self._frames = {}
         self._seq_offset = seq_offset
         self._nparts = shuffle_partitions
-        # every persisted frame of the round, released by the driver once
-        # the outputs are materialized (including those the tail persists)
-        self._cached = cached
 
     def _frame(self, name: str) -> DataFrame:
         if name not in self._frames:
@@ -154,7 +150,7 @@ class RoundResult:
         enq = global_rank(
             self._frame("enq"), ["parent_depth", "parent_seq", "link_pos"],
             out_col="seq", offset=self._seq_offset,
-            num_partitions=self._nparts, track=self._cached,
+            num_partitions=self._nparts, track=self._views.persisted,
             small_hint=n_enq,
         )
         # each branch selects the columns by name: carried and the ranked
@@ -172,8 +168,6 @@ class RoundResult:
         return self.seen_new
 
     def release(self):
-        for df in self._cached:
-            df.unpersist()
         self._views.drop()
 
 
@@ -286,8 +280,7 @@ def run_round(
         if _one_task_hint(spark, n_pending):
             admitted = admitted.coalesce(1)
         allowed = admitted.withColumn("_allowed", X["robots"])
-    allowed = allowed.persist()
-    al = v.add(allowed, "allowed")
+    al = v.persist(allowed, "allowed")
 
     # ---- deterministic fetch order (the crawl-order golden) --------------
     # proven row bound: admitted ≤ min(pending, global budget) — lets
@@ -296,7 +289,6 @@ def run_round(
     if n_pending is not None:
         admit_bound = n_pending if global_budget is None \
             else min(n_pending, global_budget)
-    _rank_caches: list = []
     fetchable = (f"SELECT * EXCEPT (_allowed, crawl_delay, rules) FROM {al} "
                  f"WHERE _allowed")
     if one_task_rank(admit_bound):
@@ -306,18 +298,17 @@ def run_round(
         ranked = v.add(global_rank(
             v.sql(fetchable), ["depth", "seq"], out_col="fetch_seq",
             offset=fetch_seq_offset, num_partitions=shuffle_partitions,
-            track=_rank_caches, small_hint=admit_bound), "ranked")
+            track=v.persisted, small_hint=admit_bound), "ranked")
 
     # ---- "fetch" = equi-join against the simulated web -------------------
     # misses behave like text/html 404s (ctype coalesced to mimetype)
     mt = quote(spec.mimetype)
-    fetched = v.sql(
+    fe = v.persist(v.sql(
         f"SELECT r.*, p.html AS _html, p.text AS _text, "
         f"coalesce(p.status, 404) AS _status, "
         f"coalesce(trim(split(p.content_type, ';')[0]), {mt}) AS _ctype_base "
         f"FROM {ranked} r LEFT JOIN {v.add(pages, 'pages')} p "
-        f"ON r.url_norm = p.url").persist()
-    fe = v.add(fetched, "fetched")
+        f"ON r.url_norm = p.url"), "fetched")
 
     # mimetype mux (job.go:620-623): non-matching pages are not handled at
     # all — except, with follow_feeds, feed-typed pages, which are handled
@@ -359,19 +350,16 @@ def run_round(
     # cancels the job at the round boundary (the cancelChan analogue).
     login_guard = bool(spec.login and spec.check_login_after_each_page
                        and spec.login_success_check)
-    _login_caches = []
     if login_guard:
         from ideacrawler_spark.functions.extract import xpath_value_udf
 
         lkey, lval = spec.login_success_check
-        checked = v.sql(f"SELECT * FROM {ok}").withColumn(
+        ck = v.persist(v.sql(f"SELECT * FROM {ok}").withColumn(
             "_logged_in",
             F.col("_is_feed")  # feed pages skip the xpath session check
             | (F.lower(xpath_value_udf(lkey)(F.col("_html")))
                == F.lit(str(lval).lower())),
-        ).persist()
-        _login_caches.append(checked)
-        ck = v.add(checked, "checked")
+        ), "checked")
         logged_out = f"(SELECT * FROM {ck} WHERE NOT _logged_in)"
         shipped_err += (
             " UNION ALL SELECT fetch_seq, '' AS url, depth, '' AS anchor_text,"
@@ -390,11 +378,10 @@ def run_round(
         f"meta, _html, _is_feed FROM {ok} WHERE {' AND '.join(gate)}")
 
     # ---- link extraction + resolution (the two Arrow UDFs) ---------------
-    resolved = (
+    rs = v.persist(
         follow.select(*X["links"]).withColumn("_res", X["resolve"])
         .selectExpr(*RESOLVED_COLUMNS)
-        .filter("url_norm IS NOT NULL").persist())
-    rs = v.add(resolved, "resolved")
+        .filter("url_norm IS NOT NULL"), "resolved")
 
     # ---- analyzed-URLs sink (job.go:815,874-893): per-page outlink set;
     #      one row per fetched page, so at most admit_bound rows
@@ -403,40 +390,36 @@ def run_round(
         "array_sort(collect_set(url_norm)) AS outlinks, "
         f"first(parent_depth) AS depth FROM {rs} GROUP BY parent_url")
 
-    # ---- eligibility (job.go:792-806) ------------------------------------
-    req_match = ["true"]
-    if spec.callback_url_regexp:
-        req_match.append(f"url_norm RLIKE {quote(spec.callback_url_regexp)}")
-    if spec.callback_anchor_regexp:
-        req_match.append(f"anchor RLIKE {quote(spec.callback_anchor_regexp)}")
-    follow_match = (f"url_norm RLIKE {quote(spec.follow_url_regexp)}"
-                    if spec.follow_url_regexp else "true")
-    eligible_all = (f"SELECT * FROM {rs} "
-                    f"WHERE ({' AND '.join(req_match)}) OR {follow_match}")
+    # ---- eligibility (job.go:792-806): the callback regexps OR the follow
+    #      regexp; without a follow regexp every resolved link is eligible
+    eligible_all = f"SELECT * FROM {rs}"
+    if spec.follow_url_regexp:
+        req_match = ["true"] + [f"{c} RLIKE {quote(rx)}" for c, rx in (
+            ("url_norm", spec.callback_url_regexp),
+            ("anchor", spec.callback_anchor_regexp)) if rx]
+        eligible_all += (f" WHERE ({' AND '.join(req_match)}) OR url_norm "
+                         f"RLIKE {quote(spec.follow_url_regexp)}")
 
     # ---- frontier URL gating (engine extension, not in the reference):
     #      suffix-blocklisted hosts and spam-signal URLs are dropped HERE,
     #      after eligibility but before the seen-set — they never consume
     #      seen-set space, checkpoint IO, or politeness budget, and the
     #      drop count rides the round's single counters action.
-    _gate_caches: list = []
     counters = []
     if spec.url_gating:
         from ideacrawler_spark.operators.urlfilter import (
             apply_url_gating, drop_gating_cols,
         )
 
-        gated = apply_url_gating(
+        gt = v.persist(apply_url_gating(
             v.sql(eligible_all), spec, url_col="url_norm", host_col="host",
-        ).persist()
-        _gate_caches.append(gated)
-        gt = v.add(gated, "gated")
+        ), "gated")
         counters.append(_counts(gt, n_url_blocked=_n_true("_url_blocked")))
-        eligible = drop_gating_cols(
-            v.sql(f"SELECT * FROM {gt} WHERE NOT _url_blocked")).persist()
+        el = v.persist(drop_gating_cols(
+            v.sql(f"SELECT * FROM {gt} WHERE NOT _url_blocked")), "eligible")
     else:
-        eligible = v.sql(eligible_all).persist()
-    el = v.add(eligible, "eligible")
+        el = (v.persist(v.sql(eligible_all), "eligible")
+              if spec.follow_url_regexp else rs)
 
     # ---- dedup: in-round first occurrence, then anti-join the seen table.
     #      ``seen_bytes`` (the seen-set's hash-build size, None if unknown)
@@ -448,25 +431,22 @@ def run_round(
     firsts = first_occurrence_sql(
         el, [c.split()[-1] for c in RESOLVED_COLUMNS])
     fits = seen_bytes is not None and _hash_build_fits(spark, seen_bytes)
-    _probe_caches: list = []
     if bloom_dir is not None and not fits:
         from ideacrawler_spark.operators import bloom
 
         # persisted: both branches of the prefiltered anti-join read ONE
         # evaluation of the Python probe
-        flagged = bloom.maybe_seen(
+        fl = v.persist(bloom.maybe_seen(
             v.sql(f"SELECT *, xxhash64(url_norm) AS url_hash FROM ({firsts})"),
-            bloom_dir, n_shards=bloom_shards).persist()
-        _probe_caches.append(flagged)
-        new_firsts = prefiltered_anti_join(flagged, seen).persist()
+            bloom_dir, n_shards=bloom_shards), "flagged")
+        new_firsts = prefiltered_anti_join(v.sql(f"SELECT * FROM {fl}"), seen)
     else:
         # firsts comes straight out of the groupBy(url_norm): the
         # partitioned anti-join reuses that exchange and hash-probes the
         # seen side unsorted
         new_firsts = anti_join_seen(
-            v.sql(firsts), seen, partitioned=fits or seen_bytes is None
-        ).persist()
-    nf = v.add(new_firsts, "new_firsts")
+            v.sql(firsts), seen, partitioned=fits or seen_bytes is None)
+    nf = v.persist(new_firsts, "new_firsts")
 
     # ---- cross-domain quirk (job.go:842-845): mark seen, don't enqueue.
     #      The CHILD host is lowercase (purell mutated u.Host before
@@ -556,11 +536,4 @@ def run_round(
                        + " UNION ALL ".join(counters) + ")")
     return RoundResult(
         v, sql, seq_offset=seq_offset, shuffle_partitions=shuffle_partitions,
-        metrics=metrics,
-        # every persisted frame of the round gets unpersisted by the driver
-        # once the outputs are materialized — nothing may pin session
-        # memory across rounds (the seen-set grows; pinned copies starved
-        # execution memory in long pytest sessions)
-        cached=[allowed, fetched, resolved, eligible, new_firsts]
-        + _probe_caches + _rank_caches + _login_caches + _gate_caches,
-    )
+        metrics=metrics)

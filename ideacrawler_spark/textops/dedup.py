@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ideacrawler_spark.operators.sqltext import release
 from ideacrawler_spark.textops.hashing import MINHASH_A, MINHASH_B, P31, h60
 
 SHINGLE_K = 3
@@ -311,8 +312,8 @@ def dedup_components(pairs: DataFrame, max_iter: int = 20,
             # materializes this checkpoint — one job per iteration, not two
             .localCheckpoint(eager=False)
         )
-        new_sum = _label_sum(new_labels)
-        labels.unpersist()
+        new_sum = _label_sum(new_labels)  # materializes new_labels
+        release(labels)
         labels = new_labels
         if new_sum == prev_sum:
             converged = True

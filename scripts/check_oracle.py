@@ -2,6 +2,9 @@
 entry on Spark and its oracle_sql() on DuckDB at the given sf dir, compare
 row count, column names, and order-insensitive values.
 
+Each line also prints ``rdds+N``: the RDDs the query left persisted
+(cached frames and ``localCheckpoint`` blocks that nothing released).
+
 Usage: python scripts/check_oracle.py [sf_dir] [query ...]
 """
 
@@ -59,6 +62,9 @@ def main():
 
     import __spark_entry__ as entry
 
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
     qs = entry.queries()
     oracles = entry.oracle_sql()
     failures = []
@@ -66,6 +72,7 @@ def main():
         if only and name not in only:
             continue
         sql = oracles.get(name)
+        before = persisted()
         try:
             sdf = fn(spark, sf_dir)
             srows = sdf.collect()
@@ -74,8 +81,9 @@ def main():
             failures.append((name, f"SPARK ERROR: {e}"))
             print(f"FAIL {name}: spark error {str(e)[:300]}")
             continue
+        leak = f"rdds+{len(persisted() - before)}"
         if sql is None:
-            print(f"okN  {name}: rows={len(srows)} (rows-only, no oracle)")
+            print(f"okN  {name}: rows={len(srows)} {leak} (rows-only, no oracle)")
             if len(srows) == 0 and name != "minhash_lsh_pairs":
                 failures.append((name, "rows-only query returned 0 rows"))
             continue
@@ -106,14 +114,14 @@ def main():
                     mismatches.append((c, dt, st, "width/type"))
             if mismatches:
                 failures.append((name, f"column type mismatch {mismatches}"))
-                print(f"FAIL {name}: column type mismatch {mismatches}")
+                print(f"FAIL {name}: {leak} column type mismatch {mismatches}")
                 continue
             cur = con.execute(sql)
             dcols = [d[0].lower() for d in cur.description]
             drows = cur.fetchall()
         except Exception as e:  # noqa: BLE001
             failures.append((name, f"DUCKDB ERROR: {e}"))
-            print(f"FAIL {name}: duckdb error {str(e)[:300]}")
+            print(f"FAIL {name}: {leak} duckdb error {str(e)[:300]}")
             continue
         problems = []
         if scols != dcols:
@@ -135,9 +143,9 @@ def main():
                 problems.append(f"values differ, e.g. {diff}")
         if problems:
             failures.append((name, "; ".join(problems)))
-            print(f"FAIL {name}: {'; '.join(p[:400] for p in problems)}")
+            print(f"FAIL {name}: {leak} {'; '.join(p[:400] for p in problems)}")
         else:
-            print(f"OK   {name}: rows={len(srows)}")
+            print(f"OK   {name}: rows={len(srows)} {leak}")
     print()
     if failures:
         print(f"{len(failures)} FAILURES:")

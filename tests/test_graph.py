@@ -1,8 +1,11 @@
 """Unit tests for the host link-graph analytics (operators/graph.py):
 hand-computed degree expectations, an exact PageRank fixpoint case, and an
-independent pure-Python integer reference for the general case."""
+independent pure-Python integer reference for the general case. The
+iterative operators keep only the blocks their output reads."""
 
 from ideacrawler_spark.operators.graph import host_degrees, pagerank
+
+from tests.test_round_fixed_cost import _persistent_rdds, _scanned_rdds
 
 
 def _edges(spark, rows):
@@ -46,8 +49,11 @@ def _pagerank_py(edges, n_iter, scale=1_000_000, d=(85, 100)):
 def test_pagerank_matches_integer_reference(spark):
     edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "a"),
              ("d", "c"), ("e", "a")]
-    got = {r["node"]: r["pr"]
-           for r in pagerank(_edges(spark, edges), n_iter=6).collect()}
+    before = _persistent_rdds(spark)
+    pr = pagerank(_edges(spark, edges), n_iter=6)
+    # the intermediate iterations' checkpoints are released
+    assert _persistent_rdds(spark) - before <= _scanned_rdds([pr])
+    got = {r["node"]: r["pr"] for r in pr.collect()}
     assert got == _pagerank_py(edges, n_iter=6)
     # dangling nodes (no out-edges would require e/no... here every node
     # with no IN-links sits at the base term after iteration 1
@@ -137,6 +143,9 @@ def test_hits_star_and_integer_reference(spark):
         return a, h
 
     a, h = ref(edges, 4)
-    got2 = {r["node"]: (r["auth"], r["hub"])
-            for r in hits(_edges(spark, edges), n_iter=4).collect()}
+    before = _persistent_rdds(spark)
+    out = hits(_edges(spark, edges), n_iter=4)
+    # the intermediate half-steps' checkpoints are released
+    assert _persistent_rdds(spark) - before <= _scanned_rdds([out])
+    got2 = {r["node"]: (r["auth"], r["hub"]) for r in out.collect()}
     assert got2 == {n: (a[n], h[n]) for n in a}

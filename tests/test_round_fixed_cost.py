@@ -7,8 +7,9 @@
   a round probes each candidate once;
 - the robots UDF runs on one task only when a round's pending rows fit
   in one Arrow batch;
-- a checkpointed crawl leaves no persisted frame behind, and the catalog
-  returns the schema a plain parquet read would infer.
+- each step of a checkpointed crawl leaves no persisted frame or temp
+  view behind, and the catalog returns the schema a plain parquet read
+  would infer.
 """
 
 import random
@@ -56,11 +57,33 @@ def _executed(df):
     return df._jdf.queryExecution().executedPlan()
 
 
+def _persisted(res, name):
+    """The round's persisted frame ``name``, read through its temp view."""
+    view = next(v for v in res._views._names if v.startswith(f"_{name}_"))
+    return res._views.sql(f"SELECT * FROM {view}")
+
+
 def _persistent_rdds(spark) -> set:
     """Ids of the persisted RDDs. Other tests' frames may be released
     meanwhile (the context cleaner unpersists unreachable RDDs), so
     callers compare what was ADDED, not the count."""
     return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+def _scanned_rdds(frames) -> set:
+    """Ids of the RDDs the frames scan: a ``localCheckpoint``'s blocks, or
+    the rows of a ``createDataFrame(list)``."""
+    ids = set()
+    for df in frames:
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        for i in range(leaves.size()):
+            if leaves.apply(i).nodeName() == "LogicalRDD":
+                ids.add(int(leaves.apply(i).rdd().id()))
+    return ids
+
+
+def _temp_views(spark) -> set:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
 
 
 # ---- (a) Arrow-built frontier rows ------------------------------------------
@@ -239,14 +262,13 @@ def test_round_probes_seen_filter_once(spark, web_dfs, tmp_path):
         assert len(probes) == 1
         assert probes[0].metrics().apply("pythonNumRowsReceived").value() > 0
     finally:
-        for df in res._cached:
-            df.unpersist()
+        res.release()
 
 
 # ---- (c) robots UDF partitioning -----------------------------------------------
 
 def _robots_udf_input_partitions(res) -> int:
-    allowed = res._cached[0]
+    allowed = _persisted(res, "allowed")
     nodes = [n for n in _plan_nodes(_executed(allowed))
              if n.getClass().getSimpleName() == "ArrowEvalPythonExec"]
     assert len(nodes) == 1
@@ -271,8 +293,7 @@ def test_robots_udf_runs_on_one_task_only_for_one_batch(spark, web_dfs):
         try:
             return _robots_udf_input_partitions(res)
         finally:
-            for df in res._cached:
-                df.unpersist()
+            res.release()
 
     # a small global budget does not shrink the tasks: they also run the
     # admission window over every pending row
@@ -305,11 +326,16 @@ def test_checkpointed_crawl_releases_persists_and_keeps_schemas(
         return out
 
     monkeypatch.setattr(ParquetManifestCatalog, "_write", recording_write)
-    before = _persistent_rdds(spark)
-    out = CrawlEngine(spark, spec, pages_df, robots_df, pushes,
+    before, views = _persistent_rdds(spark), _temp_views(spark)
+    eng = CrawlEngine(spark, spec, pages_df, robots_df, pushes,
                       checkpoint_dir=str(tmp_path / "ck"), shuffle_partitions=8,
-                      bloom_shards=8, seen_compact_every=2).run()
-    assert not _persistent_rdds(spark) - before
+                      bloom_shards=8, seen_compact_every=2)
+    eng._init_state()
+    while eng.round < spec.max_rounds:
+        eng.step()
+        assert not _persistent_rdds(spark) - before
+        assert _temp_views(spark) == views
+    out = eng.results()
 
     golden = simulate(spec, pages, robots, pushes)
     got = [(r["fetch_seq"], r["url"], r["round"])

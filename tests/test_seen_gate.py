@@ -4,7 +4,8 @@ paths.
 - below Spark's hash-build bound a round takes the exact hash anti-join
   (no Bloom probe) and folds its new keys on the driver; above it a
   checkpointed crawl probes the Bloom shards and an in-memory crawl takes
-  the sort-merge join — each equals ``refsim``;
+  the sort-merge join — each equals ``refsim``, and the in-memory crawl
+  keeps pinned only the blocks its state and results read;
 - the driver fold writes the same shard files as the applyInPandas fold;
 - a crash after the fold but before ``_COMMIT.json`` resumes bit-for-bit,
   the resume starts no Spark job before its first round, and the
@@ -29,7 +30,8 @@ from ideacrawler_spark.plans.catalog import ParquetManifestCatalog
 from ideacrawler_spark.plans.crawl import CrawlEngine
 from ideacrawler_spark.refsim import simulate
 
-from tests.test_round_fixed_cost import _executed, _plan_nodes
+from tests.test_round_fixed_cost import (
+    _executed, _persisted, _persistent_rdds, _plan_nodes, _scanned_rdds)
 
 OUTPUTS = ("counters", "shipped", "order", "part_metrics", "outlinks",
            "frontier_next", "seen_delta", "bloom")
@@ -116,8 +118,15 @@ def test_above_bound_in_memory_crawl_sort_merges(
         spark, web, web_dfs, monkeypatch, no_hash_build):
     joins = _count_calls(monkeypatch, round_mod, "anti_join_seen")
     spec = _spec(max_rounds=3)
-    eng = _engine(spark, web_dfs, web[3], spec)
+    eng = _engine(spark, web_dfs, web[3], spec, seen_compact_every=2)
+    before = _persistent_rdds(spark)
     out = eng.run()
+    # the blocks left pinned are exactly the ones the engine still reads:
+    # superseded frontiers, compacted seen deltas and the rounds' own
+    # persists are released
+    assert _persistent_rdds(spark) - before == _scanned_rdds(
+        eng._shipped + eng._order + eng._outlinks + eng._seen_parts
+        + [eng.frontier])
     assert joins and all(not j.get("partitioned") for j in joins)
     _assert_matches_refsim(web, spec, out, eng.metrics)
 
@@ -210,8 +219,7 @@ def test_round_below_bound_runs_no_python_seen_work(
         names = {n.nodeName() for n in _plan_nodes(_executed(res.seen_new))}
         assert not names & {"MapInPandas", "FlatMapGroupsInPandas"}
     finally:
-        for df in res._cached:
-            df.unpersist()
+        res.release()
 
 
 def test_small_round_extracts_and_resolves_on_one_task(spark, web_dfs):
@@ -236,7 +244,7 @@ def test_small_round_extracts_and_resolves_on_one_task(spark, web_dfs):
     try:
         # the UDFs between the resolved links and the cached fetch join
         # run in the stage that computes the resolved links' partitions
-        resolved = res._cached[2]
+        resolved = _persisted(res, "resolved")
         udfs, nodes = [], [_executed(resolved).relation().cacheBuilder()
                            .cachedPlan()]
         while nodes:
@@ -254,10 +262,9 @@ def test_small_round_extracts_and_resolves_on_one_task(spark, web_dfs):
                 nodes.append(it.next())
         assert sorted(udfs) == ["_extract", "_resolve"]
         assert resolved.rdd.getNumPartitions() == 1
-        assert res._cached[1].rdd.getNumPartitions() == 1  # fetched
+        assert _persisted(res, "fetched").rdd.getNumPartitions() == 1
     finally:
-        for df in res._cached:
-            df.unpersist()
+        res.release()
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
         pages.unpersist()
 

@@ -402,15 +402,21 @@ def test_minhash_lsh_bucket_cap_bounds_skew(spark):
 
 def test_dedup_components_transitive(spark):
     """Min-label propagation finds transitive near-dup clusters: chains
-    collapse to the cluster-min keeper, disjoint clusters stay apart."""
+    collapse to the cluster-min keeper, disjoint clusters stay apart; only
+    the returned labels' checkpoint stays pinned."""
     from ideacrawler_spark.textops.dedup import dedup_components
+
+    from tests.test_round_fixed_cost import _persistent_rdds, _scanned_rdds
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 40), (5, 6), (8, 9), (9, 10)],
         "doc_a long, doc_b long",
     )
-    comp = {r["doc_id"]: r["component"]
-            for r in dedup_components(pairs).collect()}
+    before = _persistent_rdds(spark)
+    labels = dedup_components(pairs)
+    # each superseded iteration's checkpoint is released
+    assert _persistent_rdds(spark) - before <= _scanned_rdds([labels])
+    comp = {r["doc_id"]: r["component"] for r in labels.collect()}
     assert comp == {1: 1, 2: 1, 3: 1, 40: 1, 5: 5, 6: 5, 8: 8, 9: 8, 10: 8}
 
 
